@@ -63,9 +63,16 @@ def test_record_numbers_match_artifact_recomputation(tmp_path):
     # round inferred from max(BENCH_r*)+1
     assert "r3 record" in block
     # every number recomputable from the detail dict
-    med_a = statistics.median(_DETAIL["canary"]["q_a"])
+    vals_a = _DETAIL["canary"]["q_a"]
+    med_a = statistics.median(vals_a)
     ratio_a = med_a / 0.9
-    assert f"| q_a | {med_a:.3f} | 0.9 | {ratio_a:.2f}x |" in block
+    jvm = _DETAIL.get("session_env", {}).get("machine_index", {}).get("jvm_arith_sec")
+    norm_a = f"{med_a / jvm:.2f}" if jvm else "—"
+    spread_a = (max(vals_a) - min(vals_a)) / med_a * 100
+    assert (
+        f"| q_a | {med_a:.3f} | {norm_a} | 0.9 | {ratio_a:.2f}x |"
+        f" {spread_a:.0f}% | {len(vals_a)}x1 |"
+    ) in block
     assert f"**{_DETAIL['value']} s** over 2 queries" in block
     # worst ratio line names the actual argmax
     worst = max(
@@ -142,6 +149,9 @@ def test_session_stamp_and_machine_index_in_record(tmp_path):
     assert "uptime 1234.5 s" in block
     assert "prior bench runs this boot 7" in block
     assert "machine index jvm 0.33" in block
+    # the norm column divides the quiet median by that index
+    med_a = statistics.median(d["canary"]["q_a"])
+    assert f"| q_a | {med_a:.3f} | {med_a / 0.33:.2f} |" in block
 
 
 def test_batched_canary_uses_sec_batch_else_flags_cross_protocol(tmp_path):

@@ -178,3 +178,20 @@ def test_rebuild_defers_eviction_one_generation(setup, spark):
     assert gen2 in _stored_rdd_ids()  # the new stale slot occupant
     assert gen3 in _stored_rdd_ids()
     assert df3.count() == n1 + 2
+
+
+def test_pointer_records_embedding_dim(setup):
+    """The build records the embedding dim beside built_version, so a
+    served search reads it from the pointer file instead of a Spark job;
+    a pointer written without it reads as stale and is rebuilt."""
+    store, lib, doc, idx = setup
+    idx.index_df(lib)
+    assert idx.embedding_dim(lib) == 4
+    ptr = idx._pointer(lib)
+    with open(ptr) as f:
+        d, ver, dim = f.read().split("\t")
+    assert (int(ver), int(dim)) == (store.library_version(lib), 4)
+    with open(ptr, "w") as f:
+        f.write(f"{d}\t{ver}")
+    assert idx.built_version(lib) is None
+    assert idx.refresh(lib) and idx.embedding_dim(lib) == 4

@@ -7,7 +7,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from vector_db_mvp_spark.functions.lsh import generate_planes
+from vector_db_mvp_spark.functions.lsh import (
+    generate_planes,
+    planes_dim,
+    spark_sql_plane_dot,
+)
+from vector_db_mvp_spark.operators.dbscan import knn_edges_lsh
+from vector_db_mvp_spark.operators.dedup import embedding_neardup_pairs_lsh
 from vector_db_mvp_spark.operators.lsh import (
     lsh_topk,
     lsh_topk_batch,
@@ -36,6 +42,30 @@ def test_plane_generation_deterministic():
     assert a == b
     c = generate_planes(DIM, 8, 12, seed=7)
     assert a != c
+
+
+def test_plane_dot_sql_text_is_pinned():
+    """The one literal-dot builder (LSH plane dots, centroid argmax, served
+    search scores). Its exact text is pinned: every plan that embeds it
+    parses this string, so a change here moves those plans."""
+    assert spark_sql_plane_dot("_e", [1, -0.5, 0.1]) == (
+        "aggregate(zip_with(CAST(_e AS ARRAY<DOUBLE>), array(1.0D, -0.5D, 0.1D),"
+        " (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def test_planes_dim():
+    assert planes_dim(generate_planes(DIM, 2, 3)) == DIM
+    for empty in ([], [[]], [[[]]]):
+        with pytest.raises(ValueError, match="planes must be non-empty"):
+            planes_dim(empty)
+
+
+@pytest.mark.parametrize("pairs", [knn_edges_lsh, embedding_neardup_pairs_lsh])
+def test_lsh_pair_operators_reject_empty_planes(spark, pairs):
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="planes must be non-empty"):
+        pairs(df, [])
 
 
 def test_native_and_pandas_codes_agree(spark, emb):

@@ -270,8 +270,9 @@ class VectorDbApi:
         return out
 
     def _require_library(self, lib_id: str) -> None:
+        # library_version is a driver-side metadata read: no Spark job.
         try:
-            self.store.get_library(lib_id)
+            self.store.library_version(lib_id)
         except NotFoundError:
             raise _lib_404() from None
 

@@ -23,6 +23,26 @@ Deviation by design: the reference rebuilds its index on every query
 caching. We keep a per-(library, version) plane cache (planes are the only
 build artifact the single-query plan needs) — the improvement the reference
 declared but never implemented (library.py:12-15, SURVEY.md §4).
+
+Which steps run a Spark job. A served search over a library of thousands
+of chunks is bound by jobs and driver round trips, not flops, so the job
+count is its cost model:
+
+- Served path (``SearchEngine(store, index_store)``, 'brute' or 'lsh' at
+  the index's own config): ``library_version`` is a driver-side metadata
+  read, and the corpus dim comes from the index pointer file — no job
+  either. A brute, filtered or text search runs ONE job, the result
+  collect in ``SearchResult.to_dict``. LSH adds one: the bucket probe
+  (``take(1)`` on the pruned top-k); a probe that misses adds the
+  fallback ``count()``. The row set is probed only on the error branches
+  of step 5 (missing query, wrong dim), so an empty row set still returns
+  empty hits instead of raising. The first search after a write also pays
+  the index rebuild (``ChunkIndexStore.refresh``).
+- Live path (``SearchEngine(store)`` or another LSH config): one
+  ``take(1)`` probe reads the corpus dim and detects step 4, then the
+  collect; LSH adds the same bucket probe and fallback count.
+- The ``k <= 0`` and empty-row-set results are zero-row plans: their
+  collect runs no job.
 """
 
 from __future__ import annotations
@@ -120,45 +140,35 @@ class SearchEngine:
         filters: dict[str, Any] | None = None,
     ) -> SearchResult:
         version = self.store.library_version(library_id)  # raises NotFound (404 path)
-        empty = self.collect_rows(library_id).limit(0).withColumn("score", F.lit(0.0))
 
         if k <= 0:  # step 1 — no index_used key
-            return SearchResult(self._pack(empty), index, version)
+            return SearchResult(self._no_hits(self.collect_rows(library_id)), index, version)
 
         # Serving path: precomputed index table when available. The cached
         # LSH codes only apply at the index's own (tables, planes) config.
-        use_idx = self.index_store is not None and (
+        if self.index_store is not None and (
             index == "brute"
             or (
                 index == "lsh"
                 and (lsh_tables, lsh_planes)
                 == (self.index_store.lsh_tables, self.index_store.lsh_planes)
             )
-        )
-        emb_col = "unit_embedding" if use_idx else "embedding"
-        base = self.index_store.index_df(library_id) if use_idx else self.collect_rows(library_id)
-        rows = self.apply_metadata_filters(base, filters)
+        ):
+            return self._search_indexed(
+                library_id, version, query_text, query_embedding, k, index, filters
+            )
 
-        first = rows.select(emb_col).take(1)
+        rows = self.apply_metadata_filters(self.collect_rows(library_id), filters)
+        first = rows.select("embedding").take(1)
         if not first:  # step 4
-            return SearchResult(self._pack(empty), index, version, index_used=index)
-        corpus_dim = len(first[0][emb_col])
-
-        if query_embedding is not None:  # step 5
-            qvec = [float(x) for x in query_embedding]
-        elif query_text is not None:
-            qvec = self.store.provider.embed_text(query_text, corpus_dim)
-        else:
-            raise ValueError("query_text or query_embedding required")
-        if len(qvec) != corpus_dim:  # P5 dimension guard (brute_force.py:36-37)
-            raise ValueError(f"query dim {len(qvec)} != index dim {corpus_dim}")
+            return SearchResult(self._no_hits(rows), index, version, index_used=index)
+        corpus_dim = len(first[0]["embedding"])
+        qvec = self._query_vector(query_text, query_embedding, corpus_dim)
 
         if index not in ("brute", "lsh"):  # dispatch-time error, AFTER the
             raise ValueError(f"unknown index: {index}")  # empty-rows return
 
-        if use_idx:
-            hits, used = self._search_indexed(rows, qvec, k, index)
-        elif index == "brute":  # step 6
+        if index == "brute":  # step 6
             hits = topk_cosine(rows, qvec, k, id_col="chunk_id")
             used = "brute"
         else:
@@ -173,36 +183,66 @@ class SearchEngine:
 
         return SearchResult(self._pack(hits), index, version, index_used=used)
 
-    def _search_indexed(self, rows: DataFrame, qvec: list[float], k: int, index: str):
-        """Top-k over the precomputed index: cosine == dot(unit_emb, unit_q);
-        LSH prunes on stored codes (query codes folded on the driver — same
-        buckets as hashing the raw vector since sign(dot) is norm-invariant).
-        Same fallback contract as the live path (search_service.py:127-131).
-        """
-        from .functions.lsh import bucket_codes_python, spark_sql_array_lit
-        from .functions.vector import dot
+    def _query_vector(
+        self, query_text: str | None, query_embedding: list[float] | None, corpus_dim: int
+    ) -> list[float]:
+        """Step 5 plus the P5 dimension guard (brute_force.py:36-37)."""
+        if query_embedding is not None:
+            qvec = [float(x) for x in query_embedding]
+        elif query_text is not None:
+            qvec = self.store.provider.embed_text(query_text, corpus_dim)
+        else:
+            raise ValueError("query_text or query_embedding required")
+        if len(qvec) != corpus_dim:
+            raise ValueError(f"query dim {len(qvec)} != index dim {corpus_dim}")
+        return qvec
 
-        norm = sum(x * x for x in qvec) ** 0.5
-        unit_q = [x / norm for x in qvec] if norm != 0.0 else qvec
-        q = F.expr(spark_sql_array_lit(unit_q))
+    def _search_indexed(
+        self,
+        library_id: str,
+        version: int,
+        query_text: str | None,
+        query_embedding: list[float] | None,
+        k: int,
+        index: str,
+        filters: dict[str, Any] | None,
+    ) -> SearchResult:
+        """Steps 2-7 over the precomputed index (``index`` is 'brute' or
+        'lsh'): the shared ChunkIndexStore top-k, with the live path's
+        fallback contract (search_service.py:127-131). The build recorded
+        the corpus dim, so no job reads it. The row set is probed only
+        where step 5 raises ValueError (missing query, wrong dim): an empty
+        row set returns empty hits before any query check (step 4)."""
+        idx = self.index_store
+        rows = self.apply_metadata_filters(idx.index_df(library_id), filters)
+        corpus_dim = idx.embedding_dim(library_id)
 
-        def topk(frame: DataFrame) -> DataFrame:
-            scored = frame.withColumn("score", dot(F.col("unit_embedding"), q))
-            return scored.orderBy(F.desc("score"), F.asc("chunk_id")).limit(k)
+        def no_hits() -> SearchResult:  # step 4
+            return SearchResult(self._no_hits(rows), index, version, index_used=index)
 
+        if corpus_dim == 0:  # the library has no embedded chunk
+            return no_hits()
+        try:
+            qvec = self._query_vector(query_text, query_embedding, corpus_dim)
+        except ValueError:
+            if not rows.take(1):
+                return no_hits()
+            raise
+        unit_q = idx.unit_query(qvec)
         if index == "brute":
-            return topk(rows), "brute"
-        codes = bucket_codes_python(unit_q, self.index_store.planes_for(len(unit_q)))
-        qc = F.expr("array(" + ", ".join(f"{c}L" for c in codes) + ")")
-        pruned = rows.filter(
-            F.exists(F.zip_with(F.col("lsh_codes"), qc, lambda c, x: c == x), lambda b: b)
-        )
-        hits = topk(pruned)
-        if not hits.take(1):
-            n = rows.count()
-            if n <= FALLBACK_MAX_ROWS:
-                return topk(rows), "brute"
-        return hits, "lsh"
+            hits, used = idx.topk(rows, unit_q, k), "brute"
+        else:
+            hits, used = idx.topk(idx.lsh_candidates(rows, unit_q), unit_q, k), "lsh"
+            # n == 0 keeps index_used='lsh': the empty-rows result (step 4).
+            if not hits.take(1) and 0 < rows.count() <= FALLBACK_MAX_ROWS:
+                hits, used = idx.topk(rows, unit_q, k), "brute"
+        return SearchResult(self._pack(hits), index, version, index_used=used)
+
+    @classmethod
+    def _no_hits(cls, rows: DataFrame) -> DataFrame:
+        """An empty result with the hit schema; Spark answers a zero-row
+        limit without running a job."""
+        return cls._pack(rows.limit(0).withColumn("score", F.lit(0.0)))
 
     @staticmethod
     def _pack(hits: DataFrame) -> DataFrame:

@@ -62,15 +62,27 @@ def spark_sql_array_lit(vec: list[float]) -> str:
 
 
 def spark_sql_plane_dot(vec_sql: str, plane: list[float]) -> str:
-    """Sequential-fold dot as a Spark SQL string — the same Catalyst
-    ``aggregate(zip_with(...))`` expression ``_plane_dot`` builds, but parsed
+    """Sequential-fold dot of an array column with a literal vector, as a
+    Spark SQL string — the same Catalyst ``aggregate(zip_with(...))``
+    expression ``_plane_dot`` and ``functions.vector.dot`` build, but parsed
     from ONE string. Building the tree via the Column API costs a py4j
     round-trip per literal element (T*P*D of them — seconds of driver time
-    per query); one ``F.expr`` parse is ~1000x fewer round-trips."""
+    per query); one ``F.expr`` parse is ~1000x fewer round-trips. The one
+    builder for every literal dot: LSH plane dots, centroid argmax scores
+    and the served search's cosine over stored unit vectors."""
     return (
         f"aggregate(zip_with(CAST({vec_sql} AS ARRAY<DOUBLE>), "
         f"{spark_sql_array_lit(plane)}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
     )
+
+
+def planes_dim(planes: list[list[list[float]]]) -> int:
+    """Embedding dimension of a ``planes[t][p]`` plane set. An empty set
+    (no tables, or tables without planes) has no dimension: reject it with
+    a clear error rather than a bare IndexError deep inside a plan build."""
+    if len(planes) == 0 or len(planes[0]) == 0 or len(planes[0][0]) == 0:
+        raise ValueError("planes must be non-empty")
+    return len(planes[0][0])
 
 
 def spark_sql_bucket_codes(vec_sql: str, planes: list[list[list[float]]]) -> str:

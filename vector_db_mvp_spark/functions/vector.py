@@ -32,20 +32,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def sql_dot_lit(col_sql: str, vec: list[float]) -> str:
-    """SQL-string twin of ``dot(col, <literal vector>)`` — identical
-    sequential double fold, but compiled through ONE F.expr parse instead
-    of ~2 py4j round trips per component (the functions/lsh.py
-    bucket_codes_native precedent; centroid tables are k x d literals
-    rebuilt per invocation, so Column-algebra construction latency is a
-    real per-query cost)."""
-    arr = "array(" + ", ".join(f"{float(x)!r}D" for x in vec) + ")"
-    return (
-        f"aggregate(zip_with(cast({col_sql} as array<double>), {arr},"
-        f" (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
 def sql_dot_cols(a_sql: str, b_sql: str, dim: int) -> str:
     """Codegen-friendly dot product of two array COLUMNS of statically
     known dimension: an unrolled sum of element products compiled through

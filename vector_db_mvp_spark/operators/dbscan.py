@@ -177,9 +177,10 @@ def knn_edges_lsh(
     global window), one distinct. Output feeds :func:`dbscan` unchanged —
     "eps-neighbor" just becomes "mutually-or-singly ranked k-NN edge".
     """
-    from ..functions.lsh import bucket_codes_native
+    from ..functions.lsh import bucket_codes_native, planes_dim
     from ..functions.vector import l2_norm, sql_dot_cols
 
+    dim = planes_dim(planes)
     # Norms hoisted: computed ONCE per base row (the HOF runs N times)
     # instead of inside the per-collision cosine (2x per collision,
     # interpreted) — the embedding_neardup_pairs precedent. The formula
@@ -216,7 +217,6 @@ def knn_edges_lsh(
     # r15: the dot runs as ONE unrolled codegen expression over the
     # hoisted norms (sql_dot_cols) — the HOF cosine evaluated interpreted
     # per collision and was ~95% of the sf1 edge-build wall time.
-    dim = len(planes[0][0])
     dot = F.expr(sql_dot_cols("a._e", "b._e", dim))
     cos = F.when(
         (F.col("a._n") == 0.0) | (F.col("b._n") == 0.0), F.lit(0.0)

@@ -536,9 +536,10 @@ def embedding_neardup_pairs_lsh(
     (shuffle keyed by (table, code) — sub-quadratic), then exact cosine
     verify. Recall < 1 by construction; measured against the exact variant in
     tests."""
-    from ..functions.lsh import bucket_codes_native, bucket_codes_pandas
+    from ..functions.lsh import bucket_codes_native, bucket_codes_pandas, planes_dim
     from ..functions.vector import l2_norm, sql_dot_cols
 
+    dim = planes_dim(planes)
     codes = (
         bucket_codes_native(embedding_col, planes) if native
         else bucket_codes_pandas(planes, embedding_col)
@@ -558,7 +559,6 @@ def embedding_neardup_pairs_lsh(
         F.posexplode(codes).alias("table_id", "code"),
     )
     a, b = coded.alias("a"), coded.alias("b")
-    dim = len(planes[0][0])
     cos = F.when(
         (F.col("_n1") == 0.0) | (F.col("_n2") == 0.0), F.lit(0.0)
     ).otherwise(

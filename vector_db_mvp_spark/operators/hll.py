@@ -91,7 +91,7 @@ def hll_estimate_from_state(
     cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     # 2^(53 - rho) as an exact long via a literal power-of-two lookup
     # (shiftleft needs a literal shift; float pow is inexact past 2^53).
-    # One expr parse, not 54 F.lit round trips (sql_dot_lit precedent).
+    # One expr parse, not 54 F.lit round trips (spark_sql_plane_dot precedent).
     pow2 = F.expr("array(" + ", ".join(f"{1 << i}L" for i in range(54)) + ")")
     term = F.element_at(pow2, (F.lit(53) - F.col("rho")).cast("int") + F.lit(1))
     agg = state.groupBy(*cols).agg(

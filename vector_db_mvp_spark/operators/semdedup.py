@@ -117,10 +117,10 @@ def semantic_dedup(
         l2_norm(F.col(embedding_col)).alias("_n"),
     )
     if assign == "native":
-        from ..functions.vector import sql_dot_lit
+        from ..functions.lsh import spark_sql_plane_dot
 
         scores = F.expr(
-            "array(" + ", ".join(sql_dot_lit("_e", c) for c in uc) + ")"
+            "array(" + ", ".join(spark_sql_plane_dot("_e", c) for c in uc) + ")"
         )
         assigned = base.withColumn("_s", scores).select(
             "_id",

@@ -46,11 +46,8 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.lsh import (
-    bucket_codes_native,
-    generate_planes,
-    spark_sql_plane_dot,
-)
+from ..functions import lsh as lsh_fn
+from ..functions.lsh import generate_planes, spark_sql_plane_dot
 from ..functions.vector import unit_normalize
 from ..operators.lsh import with_bucket_codes
 from .store import EntityStore
@@ -78,22 +75,37 @@ class ChunkIndexStore:
         self._planes: dict[int, list] = {}  # dim -> planes
         os.makedirs(root, exist_ok=True)
 
-    # ---- pointer files: "<dir>\t<built_version>" ------------------------
+    # ---- pointer files: "<dir>\t<built_version>\t<dim>" -----------------
+    # ``dim`` is the embedding dimension of the build (0: the library had no
+    # embedded chunk), recorded at build time so a served search learns it
+    # from this file instead of a Spark job. A pointer without the dim field
+    # reads as stale, so the next refresh rewrites it.
 
     def _pointer(self, library_id: str) -> str:
         return os.path.join(self.root, f"index-{library_id}._CURRENT")
 
-    def built_version(self, library_id: str) -> int | None:
+    def _read_pointer(self, library_id: str) -> tuple[str, int, int] | None:
         try:
             with open(self._pointer(library_id)) as f:
-                _, ver = f.read().strip().split("\t")
-            return int(ver)
+                fields = f.read().strip().split("\t")
         except FileNotFoundError:
             return None
+        if len(fields) != 3:
+            return None
+        return fields[0], int(fields[1]), int(fields[2])
+
+    def built_version(self, library_id: str) -> int | None:
+        ptr = self._read_pointer(library_id)
+        return None if ptr is None else ptr[1]
+
+    def embedding_dim(self, library_id: str) -> int:
+        """Embedding dimension of the library's current build, 0 when it
+        holds no embedded chunk. A file read, no Spark job; call
+        ``index_df`` (or ``refresh``) first so the build is current."""
+        return self._read_pointer(library_id)[2]
 
     def _current_dir(self, library_id: str) -> str:
-        with open(self._pointer(library_id)) as f:
-            return f.read().strip().split("\t")[0]
+        return self._read_pointer(library_id)[0]
 
     def planes_for(self, dim: int) -> list:
         if dim not in self._planes:
@@ -122,8 +134,8 @@ class ChunkIndexStore:
             "unit_embedding", unit_normalize(F.col("embedding"))
         )
         first = rows.select("embedding").take(1)
-        if first:
-            dim = len(first[0]["embedding"])
+        dim = len(first[0]["embedding"]) if first else 0
+        if dim:
             rows = with_bucket_codes(
                 rows, self.planes_for(dim), embedding_col="unit_embedding"
             )
@@ -137,7 +149,7 @@ class ChunkIndexStore:
         out.write.mode("overwrite").parquet(new_dir)
         tmp = self._pointer(library_id) + ".tmp"
         with open(tmp, "w") as f:
-            f.write(f"{new_dir}\t{current}")
+            f.write(f"{new_dir}\t{current}\t{dim}")
         os.replace(tmp, self._pointer(library_id))
         self.builds += 1
         return True
@@ -192,6 +204,41 @@ class ChunkIndexStore:
         return df
 
     # ---- query paths over the precomputed columns -----------------------
+    # ``unit_query``, ``lsh_candidates`` and ``topk`` are the one indexed
+    # top-k: ``search`` below and the served ``SearchEngine.search`` both
+    # compose them.
+
+    @staticmethod
+    def unit_query(qvec: Sequence[float]) -> list[float]:
+        """The query as a unit vector (a zero vector stays zero), so cosine
+        against the stored unit embeddings is a plain dot product."""
+        q = [float(x) for x in qvec]
+        norm = sum(x * x for x in q) ** 0.5
+        return [x / norm for x in q] if norm != 0.0 else q
+
+    def lsh_candidates(self, rows: DataFrame, unit_q: list[float]) -> DataFrame:
+        """Rows sharing a bucket with the query in at least one table. The
+        query's codes are folded on the driver with the build's planes
+        (sign(dot) is norm-invariant, so hashing the unit query gives the
+        raw vector's buckets) and embedded as long literals in one parsed
+        filter expression."""
+        codes = lsh_fn.bucket_codes_python(unit_q, self.planes_for(len(unit_q)))
+        qc = "array(" + ", ".join(f"{c}L" for c in codes) + ")"
+        return rows.filter(
+            F.expr(f"exists(zip_with(lsh_codes, {qc}, (c, x) -> c = x), b -> b)")
+        )
+
+    @staticmethod
+    def topk(rows: DataFrame, unit_q: list[float], k: int) -> DataFrame:
+        """Exact top-k by cosine == dot(unit_embedding, unit_q), ties broken
+        by chunk_id. One parsed SQL string instead of Column-API lambdas:
+        the HOF builders cost ~28 ms of py4j round-trips per query; the
+        parsed tree is the identical aggregate(zip_with(...)) expression
+        functions.vector.dot builds (see spark_sql_plane_dot)."""
+        scored = rows.withColumn(
+            "score", F.expr(spark_sql_plane_dot("unit_embedding", unit_q))
+        )
+        return scored.orderBy(F.desc("score"), F.asc("chunk_id")).limit(k)
 
     def search(
         self,
@@ -204,43 +251,16 @@ class ChunkIndexStore:
     ) -> DataFrame:
         """Same result contract as SearchEngine.search's hits (§2.11), served
         from the persisted index: cosine == dot(unit_emb, unit_q); LSH prunes
-        on precomputed codes before the same dot re-rank."""
+        on precomputed codes before the same dot re-rank (no brute fallback
+        here — that is SearchEngine's dispatch)."""
         from ..engine import SearchEngine  # circular-at-import-time only
 
         idx = SearchEngine.apply_metadata_filters(self.index_df(library_id), filters)
         if k <= 0:
-            return self._pack(idx.withColumn("score", F.lit(0.0)).limit(0))
-        qvec = [float(x) for x in query_embedding]
-        norm = sum(x * x for x in qvec) ** 0.5
-        unit_q = [x / norm for x in qvec] if norm != 0.0 else qvec
-        if index == "lsh":
-            first = idx.select("unit_embedding").take(1)
-            if first:
-                qc = bucket_codes_native(unit_q, self.planes_for(len(unit_q)))
-                idx = idx.filter(
-                    F.exists(
-                        F.zip_with(F.col("lsh_codes"), qc, lambda c, x: c == x),
-                        lambda b: b,
-                    )
-                )
-        elif index != "brute":
+            return SearchEngine._no_hits(idx)
+        if index not in ("brute", "lsh"):
             raise ValueError(f"unknown index: {index}")
-        # One parsed SQL string instead of Column-API lambdas: the HOF
-        # builders cost ~28 ms of py4j round-trips per query; the parsed
-        # tree is the identical aggregate(zip_with(...)) expression
-        # functions.vector.dot builds (see spark_sql_plane_dot docstring).
-        scored = idx.withColumn(
-            "score", F.expr(spark_sql_plane_dot("unit_embedding", unit_q))
-        )
-        return self._pack(scored.orderBy(F.desc("score"), F.asc("chunk_id")).limit(k))
-
-    @staticmethod
-    def _pack(hits: DataFrame) -> DataFrame:
-        return hits.select(
-            "chunk_id",
-            F.col("doc_id").alias("document_id"),
-            "library_id",
-            "text",
-            "meta_type",
-            "score",
-        )
+        unit_q = self.unit_query(query_embedding)
+        if index == "lsh":
+            idx = self.lsh_candidates(idx, unit_q)
+        return SearchEngine._pack(self.topk(idx, unit_q, k))

@@ -263,12 +263,12 @@ def _assign_cluster_expr() -> "F.Column":
     explicit term-by-term sums bit-for-bit — and keeping the expression
     small enough for codegen (64 inline products per centroid blew the
     Janino method limit and forced interpreted fallback)."""
-    from ..functions.vector import sql_dot_lit
+    from ..functions.lsh import spark_sql_plane_dot
 
     uc = _ivfpq_unit_centroids()
     arr = F.expr(
         "array("
-        + ", ".join(sql_dot_lit("embedding", uc[c]) for c in range(_IVFPQ_C))
+        + ", ".join(spark_sql_plane_dot("embedding", uc[c]) for c in range(_IVFPQ_C))
         + ")"
     )
     return (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
@@ -1375,7 +1375,7 @@ def q_ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in emb.filter(F.col("vec_id") == 0).take(1)[0]["embedding"]
     ]
-    # One expr parse, not 64 F.lit round trips (sql_dot_lit precedent).
+    # One expr parse, not 64 F.lit round trips (spark_sql_plane_dot precedent).
     qcol = F.expr("array(" + ", ".join(f"{float(x)!r}D" for x in qv) + ")")
     # Probe order from the SAME engine expression used for scoring — a
     # k-row Spark frame through cosine_similarity + round(,6), collected
