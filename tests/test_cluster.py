@@ -71,3 +71,10 @@ def test_driver_union_find_matches_distributed_loop(spark, sf_dir):
     }
     assert fast == loop
     assert len(fast) == docs.count()
+    # The union-find labels enter Spark as an Arrow local relation: no
+    # Python-worker stage under any consumer of the clusters.
+    lineage = (
+        dedup_clusters(docs, pairs, num_partitions=4)
+        ._jdf.queryExecution().toRdd().toDebugString()
+    )
+    assert "PythonRDD" not in lineage

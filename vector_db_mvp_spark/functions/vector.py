@@ -44,10 +44,11 @@ def sql_dot_cols(a_sql: str, b_sql: str, dim: int) -> str:
     left-to-right in double ((x0y0 + x1y1) + x2y2 ...) with per-element
     float→double casts; the HOF fold seeds with 0.0, which can differ
     only in the SIGN of an all-±0.0 prefix — a ±0.0 result either way,
-    indistinguishable to consumers that threshold or round. OOB/short
-    arrays yield NULL terms via try_element_at, matching zip_with's NULL
-    padding (NULL cosine either way). Callers pass pre-validated
-    simple or alias-qualified column references."""
+    indistinguishable to consumers that threshold or round. ``dim`` must
+    equal the embedding length: elements past ``dim`` are ignored, and a
+    position past either array's end is a NULL term (NULL result), so
+    the two forms differ under a length mismatch. Callers pass
+    pre-validated simple or alias-qualified column references."""
     terms = " + ".join(
         f"CAST(try_element_at({a_sql}, {i + 1}) AS DOUBLE)"
         f" * CAST(try_element_at({b_sql}, {i + 1}) AS DOUBLE)"

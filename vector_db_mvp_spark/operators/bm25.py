@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import local_frame
 from ..sqltext import sql_str
 
 
@@ -201,7 +202,8 @@ def bm25_topk_batch(
     if not queries or any(not t for t in queries.values()):
         raise ValueError("queries must be a non-empty dict of non-empty term lists")
     spark = docs.sparkSession
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(q, t) for q, terms in queries.items() for t in set(terms)],
         "query_id string, term string",
     )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Words = lowercase ASCII-alpha runs: trivially identical in Java regex and
 # DuckDB RE2, so both engines train on the same word table.
 _WORD_RE = "[a-z]+"
@@ -134,8 +136,8 @@ def bpe_train(
     merge into every word natively. Stops early if no pairs remain."""
     spark = df.sparkSession
     merges, _ = _train(df, k, text_col, fold_last=False)
-    return spark.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
+    return local_frame(
+        spark, merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
     ).orderBy("merge_rank")
 
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -163,9 +165,9 @@ def _driver_union_find(
     """Driver-side resolution of a (materialized, symmetrized) edge frame:
     classic union-find with path compression, then min-id canonical label
     per root — identical output to the label-propagation fixpoint. Edge-node
-    labels are shipped back as a createDataFrame; singletons (if ``nodes``
-    given) stay distributed via the same anti-join as the loop path, so the
-    corpus never collects."""
+    labels are shipped back as a local Arrow frame (no Python worker reads
+    them); singletons (if ``nodes`` given) stay distributed via the same
+    anti-join as the loop path, so the corpus never collects."""
     parent: dict = {}
 
     def find(x):
@@ -193,9 +195,10 @@ def _driver_union_find(
 
     dt = sym.schema["a"].dataType
     spark = sym.sparkSession
-    labels = spark.createDataFrame(
+    labels = local_frame(
+        spark,
         [(n, comp_min[find(n)]) for n in sorted(edge_nodes)],
-        schema=StructType(
+        StructType(
             [StructField(id_col, dt, False), StructField("comp", dt, False)]
         ),
     )

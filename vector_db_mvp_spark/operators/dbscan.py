@@ -229,36 +229,11 @@ def knn_edges_lsh(
             & (F.col("a._id") != F.col("b._id")),
         )
         .select(
-            F.col("a.table_id").alias("_t"),
-            F.col("a.code").alias("_co"),
             F.col("a._id").alias("src"),
             F.col("b._id").alias("dst"),
             F.round(cos, 6).alias("c"),
         )
         .filter(F.col("c") >= tau)
-    )
-    # Per-bucket EXACT pre-trim before the global per-src window (r15,
-    # guide §2.3 — cut rows before the wide stage). Keep only each src's
-    # k best candidates WITHIN each (table, code) bucket, ranked by the
-    # same total order (c DESC, dst ASC). Exactness: for a fixed src, a
-    # dst appears at most once per bucket (coded has one row per
-    # (_id, table)), and a bucket's candidate set is a subset of src's
-    # global distinct candidate set — so a pair with GLOBAL rank r <= k
-    # has fewer than k bucket candidates above it and therefore bucket
-    # rank <= r <= k in EVERY bucket where the pair collides. The trim
-    # keeps every copy of every globally-top-k pair; the extra survivors
-    # it lets through are removed by the unchanged dropDuplicates +
-    # global window below. At a fixed bucket width the trim caps the
-    # src-keyed exchange at tables*k rows per src regardless of bucket
-    # occupancy (the quantity that grows with corpus density); the
-    # downstream sort shrinks identically.
-    wb = Window.partitionBy("_t", "_co", "src").orderBy(
-        F.col("c").desc(), F.col("dst").asc()
-    )
-    cand = (
-        cand.withColumn("_rb", F.row_number().over(wb))
-        .filter(F.col("_rb") <= k)
-        .select("src", "dst", "c")
     )
     # The ranked graph is tiny relative to the session's corpus-sized
     # shuffle width; one explicit narrow hash on src satisfies BOTH the

@@ -36,6 +36,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _r6(x: float) -> float:
     return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
@@ -107,7 +109,7 @@ def mmr_rerank(
         tuple(by_id[i][f.name] for f in out_fields) + (rank, val)
         for i, rank, val in picked
     ]
-    return candidates.sparkSession.createDataFrame(data, schema)
+    return local_frame(candidates.sparkSession, data, schema)
 
 
 def mmr_rerank_batch(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def pack_documents(
     df: DataFrame,
@@ -74,7 +76,7 @@ def pack_documents(
         acc += totals[pid]
     spark = df.sparkSession
     off = F.broadcast(
-        spark.createDataFrame(offsets, "pid: int, _part_offset: long")
+        local_frame(spark, offsets, "pid: int, _part_offset: long")
     )
 
     cum = F.col("_local_cum") + F.col("_part_offset")

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.lsh import bucket_codes_native
+from ..session import local_frame
 from .lsh import lsh_candidates, with_bucket_codes
 from .topk import topk_cosine
 
@@ -340,7 +341,7 @@ def tombstone_delete(
     lifecycle runs now leave the marker directory unchanged.
     """
     if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+        ids = local_frame(spark, [(int(i),) for i in ids], f"{id_col} long")
     td = os.path.join(path, "_tombstones")
     new = ids.select(id_col)
     if os.path.isdir(td):

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Representative public-suffix subset: multi-label suffixes exercise the
 # longest-match logic; the fallback handles everything absent (PSL rule:
 # unknown TLD -> 1-label suffix).
@@ -117,8 +119,8 @@ def registrable_domain_map(hosts: DataFrame, host_col: str = "host") -> DataFram
     broadcast suffix join keeps matches; max(k) per host wins; unknown
     TLDs fall back to k=1."""
     spark = hosts.sparkSession
-    suffixes = spark.createDataFrame(
-        [(s,) for s in PUBLIC_SUFFIXES], "suffix string"
+    suffixes = local_frame(
+        spark, [(s,) for s in PUBLIC_SUFFIXES], "suffix string"
     )
     lab = hosts.select(host_col).distinct().withColumn(
         "_labels", F.split(F.col(host_col), "[.]")

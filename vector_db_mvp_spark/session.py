@@ -14,9 +14,11 @@ Local tests run on ``local[N]`` but every knob here is chosen for the
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import TimestampType
 
 
 def get_spark(app_name: str = "vector_db_mvp_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -53,3 +55,45 @@ def get_spark(app_name: str = "vector_db_mvp_spark", shuffle_partitions: int | N
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-built rows as a Spark frame, shipped as one Arrow table.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes pickled rows into
+    a ``PythonRDD`` (4 partitions even for one row), so every plan that
+    reads the frame runs Python-worker tasks to unpickle them. An Arrow
+    table becomes a JVM-only local relation instead: no Python worker is
+    ever started for it.
+
+    ``schema`` is a StructType or a DDL string; the frame's schema is
+    exactly that (types, nullability), also for empty ``rows``. Rows are
+    tuples (or Rows) in field order. A naive ``datetime`` in a top-level
+    ``timestamp`` field is read as system-local time, as the row path
+    does; ``timestamp_ntz`` takes it as is. A NULL in a non-nullable
+    top-level field raises ``ValueError``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            # pyarrow takes a datetime's wall clock and drops its tzinfo,
+            # so hand it UTC (a naive value is system-local, as before).
+            values = [
+                v.astimezone(_dt.timezone.utc) if isinstance(v, _dt.datetime) else v
+                for v in values
+            ]
+        arr = pa.array(values, type=arrow_field.type)
+        if arr.null_count and not field.nullable:
+            raise ValueError(f"field {field.name!r} is not nullable but got NULL")
+        arrays.append(arr)
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

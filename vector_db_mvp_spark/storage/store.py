@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..embedding.provider import EmbeddingProvider, HashEmbeddingProvider
 from ..schemas import CHUNK_SCHEMA, DOCUMENT_SCHEMA, LIBRARY_SCHEMA
+from ..session import local_frame
 
 _DIM_TABLES = {
     "libraries": LIBRARY_SCHEMA,
@@ -80,7 +81,7 @@ class EntityStore:
         os.makedirs(root, exist_ok=True)
         for t, schema in _DIM_TABLES.items():
             if not os.path.exists(self._pointer(t)):
-                self._write(t, spark.createDataFrame([], schema))
+                self._write(t, local_frame(spark, [], schema))
         if not os.path.exists(self._pointer("chunks")):
             self._flip_chunks_map({})
 
@@ -120,7 +121,7 @@ class EntityStore:
                 g["dir"] for gens in self._chunks_map().values() for g in gens
             )
             if not dirs:
-                return self.spark.createDataFrame([], CHUNK_SCHEMA)
+                return local_frame(self.spark, [], CHUNK_SCHEMA)
             return self.spark.read.schema(CHUNK_SCHEMA).parquet(*dirs)
         return self.spark.read.schema(_TABLES[table]).parquet(self._read_pointer(table))
 
@@ -130,7 +131,7 @@ class EntityStore:
         filter needed because the layout IS the partition."""
         dirs = self._library_dirs(library_id)
         if not dirs:
-            return self.spark.createDataFrame([], CHUNK_SCHEMA)
+            return local_frame(self.spark, [], CHUNK_SCHEMA)
         return self.spark.read.schema(CHUNK_SCHEMA).parquet(*dirs)
 
     def _write(self, table: str, df: DataFrame) -> None:
@@ -199,7 +200,7 @@ class EntityStore:
                     f"chunks v{version} was vacuumed: missing {missing[0]}"
                 )
             if not dirs:
-                return self.spark.createDataFrame([], CHUNK_SCHEMA)
+                return local_frame(self.spark, [], CHUNK_SCHEMA)
             return self.spark.read.schema(CHUNK_SCHEMA).parquet(*dirs)
         if not os.path.exists(snap):
             raise FileNotFoundError(f"{table} v{version} was vacuumed: {snap}")
@@ -324,7 +325,7 @@ class EntityStore:
         lib_id = str(uuid.uuid4())
         ts = _now()
         row = [(lib_id, name, description, tags, ts, ts, 0)]
-        new = self.spark.createDataFrame(row, LIBRARY_SCHEMA)
+        new = local_frame(self.spark, row, LIBRARY_SCHEMA)
         self._write("libraries", self.read("libraries").unionByName(new))
         return lib_id
 
@@ -397,7 +398,8 @@ class EntityStore:
         self._require("libraries", library_id=library_id)
         doc_id = str(uuid.uuid4())
         ts = _now()
-        new = self.spark.createDataFrame(
+        new = local_frame(
+            self.spark,
             [(doc_id, library_id, title, category, ts, ts)], DOCUMENT_SCHEMA
         )
         self._write("documents", self.read("documents").unionByName(new))
@@ -464,7 +466,8 @@ class EntityStore:
         chunk_id = str(uuid.uuid4())
         ts = _now()
         emb = [float(x) for x in embedding] if embedding is not None else None
-        new = self.spark.createDataFrame(
+        new = local_frame(
+            self.spark,
             [(chunk_id, doc_id, library_id, text, emb, meta_type, ts, ts)], CHUNK_SCHEMA
         )
         self._append_chunks_library(library_id, new, rows=1)

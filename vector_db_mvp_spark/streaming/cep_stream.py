@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.rollup_state import RollupState
+from ..session import local_frame
 from .replay import batch_key
 
 
@@ -98,7 +99,8 @@ class CepIngest:
         if self.state.exists():
             st = self.state.read()
         else:
-            st = self.spark.createDataFrame(
+            st = local_frame(
+                self.spark,
                 [],
                 f"{k} long, last_a timestamp_ntz,"
                 " chain struct<b_ts: timestamp_ntz, a_ts: timestamp_ntz>",

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import l2_norm
+from ..session import local_frame
 from .replay import batch_key
 
 
@@ -65,8 +66,8 @@ def publish_norm_reference(
         )
         rows.append((i + 1, float(lo), mass / n))
     spark = df.sparkSession
-    spark.createDataFrame(
-        rows, "bin int, lo double, expected_pct double"
+    local_frame(
+        spark, rows, "bin int, lo double, expected_pct double"
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from ..engine import SearchEngine
+from ..session import local_frame
 from ..storage.store import EntityStore
 
 COMMAND_SCHEMA = StructType(
@@ -84,7 +85,7 @@ class SessionStreamProcessor:
 
     def _log(self, entries: list[tuple]) -> None:
         if entries:
-            self.spark.createDataFrame(entries, TIMELINE_SCHEMA).write.mode(
+            local_frame(self.spark, entries, TIMELINE_SCHEMA).write.mode(
                 "append"
             ).parquet(self.timeline_dir)
 

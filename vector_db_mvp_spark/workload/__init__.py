@@ -50,22 +50,36 @@ for _m in _MODULES:
 # Queries whose Spark plan or operator implementation changed this round.
 # They are forced INTO the gate window (priority 2) for re-verification.
 _CHANGED_THIS_ROUND = [
-    # round 14
-    # decode_media/resize_media codec-resolution chain changed: image rows
-    # now try PIL -> built-in PNG codec (functions/png.py) and audio rows
-    # try stdlib wave, degrading per row to the stub — the utf-8 fixture
-    # family's OUTPUT is unchanged (non-PNG/non-WAV bytes all stub) but
-    # every media plan's worker closure changed, so re-verify.
-    "media_decode",
-    "media_resize",
-    "media_frames",
-    # pagerank weight entry guard: the unreachable isNull aggregate column
-    # was removed (ADVICE r13); ranks are byte-identical but the guard
-    # aggregate in every weighted/unweighted rank plan changed.
-    "part_pagerank_weighted",
-    "part_ppr_weighted",
-    "supplier_pagerank",
-    "supplier_ppr",
+    # rounds 15-16 (re-verify the plans those rounds changed)
+    # media_resize_real: build+resize fused into one mapInPandas.
+    "media_resize_real",
+    # hoisted L2 norms + unrolled codegen dot (sql_dot_cols); the dbscan
+    # per-bucket pre-trim window is removed again this round.
+    "dbscan_knn_clusters",
+    "dbscan_embedding_clusters",
+    "dedup_embedding_lsh",
+    # kcore / connected components fuse the lazy checkpoint with the
+    # convergence count.
+    "dedup_clusters",
+    "substring_clusters",
+    "part_golden_record",
+    "part_kcore",
+    "part_kcore_served",
+    # this round: driver-built rows enter the plan as an Arrow local
+    # relation (session.local_frame) instead of a PythonRDD scan. The set
+    # is every registered query whose builder calls local_frame at
+    # sf0.001 (found by running all builders with a spy on it); the
+    # union-find consumers above are in it too.
+    "ann_ivf_recall_curve",
+    "bm25_batch",
+    "bpe_train_merges",
+    "corpus_curation",
+    "dedup_keep_best",
+    "domain_quality_rollup",
+    "lsh_topk_served_after_delete",
+    "mmr_topk",
+    "sequence_packing",
+    "sequence_packing_bpe",
 ]
 
 

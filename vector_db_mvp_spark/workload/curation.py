@@ -22,6 +22,7 @@ from ..sinks.shards import assign_shards, shard_manifest
 from ..operators.packing import pack_documents, sql_pack_documents
 from ..operators.pii import pii_redact, sql_redacted
 from ..operators.quality import quality_rules, sql_quality_rules
+from ..session import local_frame
 from ..sources.testdata import load_table
 
 
@@ -541,8 +542,8 @@ def q_domain_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     canon = with_canonical_url(docs.withColumn("url", F.expr(_URL_GEN_EXPR)))
     dmap = registrable_domain_map(canon.select("host"))
-    blocked = spark.createDataFrame(
-        [("site-3.co.uk",), ("site-5.org",)], "domain string"
+    blocked = local_frame(
+        spark, [("site-3.co.uk",), ("site-5.org",)], "domain string"
     )
     return (
         canon.join(dmap, "host")

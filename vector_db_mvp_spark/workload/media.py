@@ -254,7 +254,10 @@ def q_media_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pushed through mapInPandas, so all three payload kinds would be
         # built and 2/3 discarded — 3x wasted codec CPU. id % 3 == 0
         # IS the image predicate (the builder's split rule); the kind
-        # filter below stays as a no-op safety net.
+        # filter below stays as a no-op safety net. It runs AFTER the
+        # fused build+resize, so should the two rules ever drift, the
+        # non-image rows would pay codec and resize CPU before being
+        # dropped (same output, wasted work).
         load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 3 == 0
         ),
@@ -365,7 +368,10 @@ def q_media_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pushed through mapInPandas, so all three payload kinds would be
         # built and 2/3 discarded — 3x wasted codec CPU. id % 3 == 0
         # IS the image predicate (the builder's split rule); the kind
-        # filter below stays as a no-op safety net.
+        # filter below stays as a no-op safety net. It runs AFTER the
+        # fused build+resize, so should the two rules ever drift, the
+        # non-image rows would pay codec and resize CPU before being
+        # dropped (same output, wasted work).
         load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 3 == 0
         )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.lsh import generate_planes, sql_bucket_code
 from ..operators.lsh import lsh_topk
 from ..operators.topk import topk_cosine
+from ..session import local_frame
 from ..sources.testdata import load_table
 
 # --------------------------------------------------------------------------
@@ -1385,7 +1386,7 @@ def q_ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three would silently reorder probes. Now only the two engines
     # that already must agree on `scored` participate.
     cent_rows = [(c, [float(x) for x in vec]) for c, vec in enumerate(centroids)]
-    cent_df = spark.createDataFrame(cent_rows, "cluster int, c array<double>")
+    cent_df = local_frame(spark, cent_rows, "cluster int, c array<double>")
     cent_scores = cent_df.select(
         "cluster",
         F.round(cosine_similarity(F.col("c"), qcol), 6).alias("cs"),
