@@ -75,7 +75,7 @@ def test_adds_and_deletes_match_net_rebuild(spark, setup, tmp_path):
     want = _rows(
         lsh_topk(
             emb.filter(F.col("vec_id") != victim), qv, 10, PLANES,
-            score_decimals=6, native=True,
+            score_decimals=6,
         )
     )
     assert got == want

@@ -1,13 +1,18 @@
 """LSH index behavior (reference lsh.py semantics) beyond the oracle gate:
-determinism, pandas/native hash agreement, recall vs brute force, fallback
-dispatch, and batch-mode parity with single-query mode."""
+determinism, the column kernel against its driver twin (every row, plus the
+edge rows), recall vs brute force, fallback dispatch, and batch-mode parity
+with single-query mode."""
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from vector_db_mvp_spark.functions.lsh import (
+    bucket_codes,
+    bucket_codes_python,
     generate_planes,
     planes_dim,
     spark_sql_plane_dot,
@@ -68,31 +73,51 @@ def test_lsh_pair_operators_reject_empty_planes(spark, pairs):
         pairs(df, [])
 
 
-def test_native_and_pandas_codes_agree(spark, emb):
+def test_kernel_matches_python_twin_on_every_row(spark, sf_dir):
+    """The column kernel equals the driver twin on every row of the sf0.01
+    float32 embeddings: both run the same sequential double fold, so the
+    codes agree bit for bit (a query's driver-folded codes must find the
+    rows the kernel bucketed beside it)."""
+    emb = load_table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "embeddings")
     planes = generate_planes(DIM, 8, 12, seed=42)
-    nat = with_bucket_codes(emb, planes, native=True).select("vec_id", "lsh_codes")
-    pan = with_bucket_codes(emb, planes, native=False).select("vec_id", "lsh_codes")
-    a = {r["vec_id"]: r["lsh_codes"] for r in nat.collect()}
-    b = {r["vec_id"]: r["lsh_codes"] for r in pan.collect()}
-    assert a == b
+    rows = with_bucket_codes(emb, planes).select("embedding", "lsh_codes").collect()
+    assert len(rows) > 0
+    for r in rows:
+        want = None if r["embedding"] is None else bucket_codes_python(r["embedding"], planes)
+        assert r["lsh_codes"] == want
 
 
-def test_python_fold_matches_native_codes(spark, emb, query_vec):
-    """Driver-side sequential fold (bucket_codes_python) must be bitwise-
-    identical to the Catalyst expression — it's what literal query vectors
-    compile through (constant codes instead of a T*P*D expression tree)."""
-    from vector_db_mvp_spark.functions.lsh import (
-        bucket_codes_native,
-        bucket_codes_python,
-        spark_sql_array_lit,
+def _codes(spark, vectors, planes):
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vectors)], "i long, e array<float>"
     )
+    rows = df.select("i", bucket_codes("e", planes).alias("c")).collect()
+    return [r["c"] for r in sorted(rows, key=lambda r: r["i"])]
 
-    planes = generate_planes(DIM, 8, 12, seed=42)
-    qv = [float(x) for x in query_vec]
-    native = spark.range(1).select(
-        bucket_codes_native(spark_sql_array_lit(qv), planes).alias("c")
-    ).head()["c"]
-    assert bucket_codes_python(qv, planes) == list(native)
+
+def test_kernel_edge_rows(spark):
+    """NULL embedding -> NULL codes; the zero vector's dots are all 0.0, so
+    every bit is set; a NULL element makes that row's dots NaN, clearing
+    all of its bits."""
+    planes = generate_planes(4, 3, 5, seed=7)
+    full = (1 << 5) - 1
+    got = _codes(spark, [None, [0.0] * 4, [1.0, None, 2.0, 3.0], [1.0, -2.0, 0.5, 3.0]], planes)
+    assert got[0] is None
+    assert got[1] == [full] * 3
+    assert got[2] == [0, 0, 0]
+    assert got[3] == bucket_codes_python([1.0, -2.0, 0.5, 3.0], planes)
+
+
+def test_kernel_rejects_wrong_length(spark):
+    planes = generate_planes(4, 2, 3, seed=7)
+    with pytest.raises(Exception, match=r"ValueError: embedding dimension 3 != planes dimension 4"):
+        _codes(spark, [[1.0, 2.0, 3.0, 4.0], [1.0, 2.0, 3.0]], planes)
+
+
+def test_kernel_rejects_empty_planes():
+    for empty in ([], [[]], [[[]]]):
+        with pytest.raises(ValueError, match="planes must be non-empty"):
+            bucket_codes("embedding", empty)
 
 
 def test_lsh_subset_of_corpus_and_recall(spark, emb, query_vec):

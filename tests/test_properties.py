@@ -54,9 +54,9 @@ def test_topk_matches_python_reference(spark, vectors, q, k):
 @given(vectors=st.lists(vec, min_size=1, max_size=8))
 @SET
 def test_bucket_codes_stable_and_bounded(spark, vectors):
-    """Python fold == Catalyst expression for arbitrary vectors, and every
-    code fits in the P-bit range."""
-    from vector_db_mvp_spark.functions.lsh import bucket_codes_native
+    """Column kernel == Python fold for arbitrary vectors, and every code
+    fits in the P-bit range."""
+    from vector_db_mvp_spark.functions.lsh import bucket_codes
 
     planes = generate_planes(DIM, 4, 6, seed=42)
     df = spark.createDataFrame(
@@ -65,7 +65,7 @@ def test_bucket_codes_stable_and_bounded(spark, vectors):
     )
     got = {
         r["vec_id"]: list(r["c"])
-        for r in df.select("vec_id", bucket_codes_native("embedding", planes).alias("c")).collect()
+        for r in df.select("vec_id", bucket_codes("embedding", planes).alias("c")).collect()
     }
     for i, v in enumerate(vectors):
         codes = bucket_codes_python([float(x) for x in v], planes)

@@ -83,9 +83,9 @@ def test_served_plan_has_no_per_row_hashing(spark, corpus_path, index_root):
         spark, corpus_path, qv, 5, _PLANES, root=index_root
     )
     plan = served._jdf.queryExecution().executedPlan().toString()
-    # The live path hashes every row at query time (Arrow matmul batches or
-    # T x P native fold dots); the served plan must instead read the
-    # precomputed column straight off the parquet scan.
+    # The live path hashes every row at query time (the Arrow kernel); the
+    # served plan must instead read the precomputed column straight off the
+    # parquet scan.
     assert "ArrowEvalPython" not in plan  # no query-time pandas hashing
     scan = plan[plan.index("Scan parquet"):]
     assert "lsh_codes" in scan  # codes come off the scan, not an expression

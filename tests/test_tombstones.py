@@ -54,7 +54,7 @@ def test_lsh_delete_matches_filtered_rebuild(spark, corpus, tmp_path):
     want = _rows(
         lsh_topk(
             emb.filter(F.col("vec_id") != victim), qv, 10, PLANES,
-            score_decimals=6, native=True,
+            score_decimals=6,
         )
     )
     assert after == want

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.lsh import generate_planes
-from .operators.lsh import FALLBACK_MAX_ROWS, lsh_topk
+from .operators.lsh import FALLBACK_MAX_ROWS, search_with_fallback
 from .operators.topk import topk_cosine
 from .storage.store import EntityStore
 
@@ -171,15 +171,9 @@ class SearchEngine:
         if index == "brute":  # step 6
             hits = topk_cosine(rows, qvec, k, id_col="chunk_id")
             used = "brute"
-        else:
+        else:  # search_service.py:127-131
             planes = self._planes(library_id, version, corpus_dim, lsh_tables, lsh_planes)
-            hits = lsh_topk(rows, qvec, k, planes, id_col="chunk_id")
-            used = "lsh"
-            if not hits.take(1):
-                n = rows.count()
-                if n <= FALLBACK_MAX_ROWS:  # search_service.py:127-131
-                    hits = topk_cosine(rows, qvec, k, id_col="chunk_id")
-                    used = "brute"
+            hits, used = search_with_fallback(rows, qvec, k, planes, id_col="chunk_id")
 
         return SearchResult(self._pack(hits), index, version, index_used=used)
 

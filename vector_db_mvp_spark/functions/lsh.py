@@ -4,8 +4,8 @@
 Plane generation reproduces the reference bit-for-bit: one shared
 ``random.Random(seed)`` drawing ``gauss(0,1)`` in (table, plane, dim) order,
 each plane L2-normalized (``lsh.py:43-52``). Planes are generated on the
-driver and embedded in the plan as literals / broadcast numpy — tiny
-(T*P*D doubles) and exact, which is what guarantees bucket parity.
+driver and shipped in the kernel's closure — tiny (T*P*D doubles) and
+exact, which is what guarantees bucket parity.
 
 Bucket code (reference ``lsh.py:58-64``): P-bit integer, bit i set iff
 ``dot(v, plane_i) >= 0``. The reference hashes the *unit* vector, but
@@ -13,14 +13,20 @@ Bucket code (reference ``lsh.py:58-64``): P-bit integer, bit i set iff
 the zero vector is left unchanged by ``_unit``), so we hash raw vectors and
 skip a normalization pass.
 
-Two implementations of the same function:
-- ``bucket_codes_native`` — pure Catalyst expressions with sequential folds;
-  bitwise-identical to the DuckDB oracle, used by oracle-checked queries.
-- ``bucket_codes_pandas`` — Arrow-batched numpy ``V @ P.T`` sign bits; the
-  throughput path for index builds at scale (one BLAS matmul per batch
-  instead of T*P scalar folds per row).
-The two agree except when a dot lands within float-reordering distance of
-exactly 0.0 — probability ~0 for real embeddings.
+One exact kernel, three renderings of one fold. Every dot is the sequential
+double fold ``acc = 0.0; acc = acc + v[j] * p[j]`` for j = 0..D-1:
+- ``bucket_codes`` — the column kernel: an Arrow-batched pandas UDF that
+  stacks a batch as a float64 ``(n, D)`` matrix and runs the fold column by
+  column against all T*P planes at once;
+- ``bucket_codes_python`` — the driver twin for one literal vector (query
+  codes are embedded in plans as long literals);
+- ``sql_bucket_code`` — the DuckDB oracle SQL.
+
+Same IEEE op order everywhere (numpy ufuncs never contract a multiply and an
+add into an FMA), so the three agree bit for bit on every vector of finite,
+non-NULL elements. A NULL or NaN element is where they part: DuckDB's
+``list_sum`` skips a NULL product and DuckDB orders NaN above every number,
+while the kernel's NaN dot clears the bit.
 """
 
 from __future__ import annotations
@@ -64,12 +70,12 @@ def spark_sql_array_lit(vec: list[float]) -> str:
 def spark_sql_plane_dot(vec_sql: str, plane: list[float]) -> str:
     """Sequential-fold dot of an array column with a literal vector, as a
     Spark SQL string — the same Catalyst ``aggregate(zip_with(...))``
-    expression ``_plane_dot`` and ``functions.vector.dot`` build, but parsed
-    from ONE string. Building the tree via the Column API costs a py4j
-    round-trip per literal element (T*P*D of them — seconds of driver time
-    per query); one ``F.expr`` parse is ~1000x fewer round-trips. The one
-    builder for every literal dot: LSH plane dots, centroid argmax scores
-    and the served search's cosine over stored unit vectors."""
+    expression ``functions.vector.dot`` builds, but parsed from ONE string.
+    Building the tree via the Column API costs a py4j round-trip per
+    literal element (D of them per dot — seconds of driver time for a
+    centroid table); one ``F.expr`` parse is far fewer round-trips. The one
+    builder for every literal dot: projections, centroid argmax scores and
+    the served search's cosine over stored unit vectors."""
     return (
         f"aggregate(zip_with(CAST({vec_sql} AS ARRAY<DOUBLE>), "
         f"{spark_sql_array_lit(plane)}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
@@ -85,25 +91,12 @@ def planes_dim(planes: list[list[list[float]]]) -> int:
     return len(planes[0][0])
 
 
-def spark_sql_bucket_codes(vec_sql: str, planes: list[list[list[float]]]) -> str:
-    """Spark SQL string computing the full array<long> of per-table codes."""
-    tables = []
-    for table in planes:
-        bits = [
-            f"(CASE WHEN {spark_sql_plane_dot(vec_sql, plane)} >= 0.0D"
-            f" THEN {1 << i}L ELSE 0L END)"
-            for i, plane in enumerate(table)
-        ]
-        tables.append("(" + " + ".join(bits) + ")")
-    return "array(" + ", ".join(tables) + ")"
-
-
 def bucket_codes_python(vec: list[float], planes: list[list[list[float]]]) -> list[int]:
-    """Driver-side codes for one vector. The explicit sequential fold makes
-    it bitwise-identical to the Catalyst ``aggregate(zip_with(...))``
-    expression (same IEEE-double op order), so a literal query vector's codes
-    can be computed here and embedded as plain int literals — removing the
-    whole T*P*D plane-literal expression from the query side of the plan."""
+    """Driver-side codes for one vector: the sequential fold of
+    :func:`bucket_codes` in plain Python, so its codes equal the kernel's.
+    A literal query vector's codes are computed here and embedded as long
+    literals (see ``operators.lsh.lsh_candidates``) — no plane literal ever
+    enters the query side of a plan."""
     out = []
     for table in planes:
         code = 0
@@ -117,72 +110,53 @@ def bucket_codes_python(vec: list[float], planes: list[list[list[float]]]) -> li
     return out
 
 
-def _plane_dot(v: Column, plane: list[float]) -> Column:
-    """Sequential-fold dot of an embedding column with a literal plane."""
-    lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-    return F.aggregate(
-        F.zip_with(v.cast("array<double>"), lit_plane, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def bucket_codes(col_name: str, planes: list[list[list[float]]]) -> Column:
+    """array<long> of per-table bucket codes for an embedding column — the
+    one column kernel.
 
+    Arrow-batched pandas UDF: each batch's vectors are stacked as a float64
+    ``(n, D)`` matrix and folded column by column against all T*P planes
+    at once, ``acc = acc + V[:, j] * plane[j]`` — the op order of
+    :func:`bucket_codes_python` and :func:`sql_bucket_code`, so codes are
+    bit-identical to both on finite elements. Input rules:
 
-def bucket_codes_native(
-    v: Column | str | list[float], planes: list[list[list[float]]]
-) -> Column:
-    """array<long> of per-table bucket codes, as native expressions.
+    - a NULL embedding gets NULL codes;
+    - a NULL element makes its row's dots NaN, so all of that row's bits
+      are 0;
+    - a row whose length is not the planes' dimension raises ValueError
+      naming both dimensions;
+    - empty planes are rejected here, at plan build (:func:`planes_dim`).
 
-    ``v`` may be a column NAME or a literal vector — both compile through a
-    single ``F.expr`` parse (fast plan construction). A ``Column`` input
-    falls back to element-wise tree building (py4j-heavy; avoid on hot
-    paths — it exists for composability with arbitrary expressions)."""
-    if isinstance(v, str):
-        return F.expr(spark_sql_bucket_codes(v, planes))
-    if isinstance(v, (list, tuple)):
-        # Constant vector -> constant codes; fold on the driver.
-        codes = bucket_codes_python([float(x) for x in v], planes)
-        return F.expr("array(" + ", ".join(f"{c}L" for c in codes) + ")")
-    table_codes = []
-    for table in planes:
-        code = F.lit(0).cast("long")
-        for i, plane in enumerate(table):
-            bit = F.when(_plane_dot(v, plane) >= 0.0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            code = code + bit
-        table_codes.append(code)
-    return F.array(*table_codes)
+    The planes ride in the UDF closure (T*P*D doubles, a few KB)."""
+    dim = planes_dim(planes)
+    flat = np.asarray(planes, dtype=np.float64)
+    n_tables, n_planes = flat.shape[0], flat.shape[1]
+    flat = flat.reshape(n_tables * n_planes, dim)
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-
-def bucket_codes_pandas(planes: list[list[list[float]]], embedding_col: str = "embedding"):
-    """mapInPandas-free scalar pandas UDF: codes for a batch via one matmul.
-
-    Returns a pandas_udf producing array<long>. ``P`` is captured in the
-    closure and shipped once per executor (broadcast-by-closure; T*P*D
-    doubles — a few KB)."""
-    P = np.asarray(planes, dtype=np.float64)  # (T, P, D)
-    T, Pn, D = P.shape
-    flat = P.reshape(T * Pn, D)  # (T*P, D)
-    weights = (1 << np.arange(Pn, dtype=np.int64))  # (P,)
+    def fold(vecs: list[np.ndarray]) -> list[list[int]]:
+        lens = np.fromiter(map(len, vecs), np.int64, len(vecs))
+        if (lens != dim).any():
+            bad = int(lens[lens != dim][0])
+            raise ValueError(f"embedding dimension {bad} != planes dimension {dim}")
+        v = np.concatenate(vecs).astype(np.float64, copy=False).reshape(-1, dim)
+        acc = 0.0
+        for j in range(dim):
+            acc = acc + v[:, j : j + 1] * flat[:, j]
+        bits = (acc >= 0.0).reshape(-1, n_tables, n_planes)
+        return (bits * weights).sum(axis=2).tolist()
 
     @F.pandas_udf(ArrayType(LongType()))
     def _codes(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in batches:
-            out = []
-            vecs = s.to_numpy()
-            for v in vecs:
-                if v is None:
-                    out.append(None)
-                    continue
-                bits = (np.asarray(v, dtype=np.float64) @ flat.T) >= 0.0  # (T*P,)
-                codes = (bits.reshape(T, Pn) * weights).sum(axis=1)
-                out.append(codes.tolist())
-            yield pd.Series(out)
+            live = [v for v in s if v is not None]
+            codes = iter(fold(live) if live else [])
+            yield pd.Series([None if v is None else next(codes) for v in s])
 
-    return _codes(F.col(embedding_col))
+    return _codes(F.col(col_name))
 
 
-# --- DuckDB oracle SQL generation (mirrors bucket_codes_native exactly) ----
+# --- DuckDB oracle SQL generation (the same fold as bucket_codes) ----------
 
 def sql_plane_dot(vec_expr: str, plane: list[float]) -> str:
     lit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"

@@ -177,7 +177,7 @@ def knn_edges_lsh(
     global window), one distinct. Output feeds :func:`dbscan` unchanged —
     "eps-neighbor" just becomes "mutually-or-singly ranked k-NN edge".
     """
-    from ..functions.lsh import bucket_codes_native, planes_dim
+    from ..functions.lsh import bucket_codes, planes_dim
     from ..functions.vector import l2_norm, sql_dot_cols
 
     dim = planes_dim(planes)
@@ -185,25 +185,26 @@ def knn_edges_lsh(
     # instead of inside the per-collision cosine (2x per collision,
     # interpreted) — the embedding_neardup_pairs precedent. The formula
     # stays dot/(na*nb) with the zero-norm guard, values bit-identical.
+    # The codes are hashed here too, below the repartition: both sides of
+    # the self-join below then read ONE (reused) shuffle, so the Arrow
+    # kernel runs once per row instead of once per join side
+    # (dbscan_knn_clusters, same JVM at sf0.01, identical rows: warm
+    # median 3.16 -> 2.45 s).
     base = df.filter(F.col(embedding_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
         F.col(embedding_col).alias("_e"),
         l2_norm(F.col(embedding_col)).alias("_n"),
+        bucket_codes(embedding_col, planes).alias("_c"),
     )
-    # Codes MUST reference the post-rename column "_e" — they are applied
-    # to `base`/`coded`, where the embedding column no longer exists under
-    # its original name (r8 regression: building against embedding_col
-    # made every invocation fail analysis with UNRESOLVED_COLUMN).
-    codes = bucket_codes_native("_e", planes)
     # Compute-spreading repartition (explicit count — AQE cannot coalesce
-    # it): the plane-dot coding + per-collision cosine is the CPU-heavy
-    # stage, and a single parquet file otherwise pins it to the scan's 1-2
-    # input partitions (a 44 s sf0.1 probe leg dropped to seconds once
-    # spread). The shuffled payload is just (id, embedding) — N rows.
+    # it): the per-collision cosine is the CPU-heavy stage, and a single
+    # parquet file otherwise pins it to the scan's 1-2 input partitions (a
+    # 44 s sf0.1 probe leg dropped to seconds once spread). The shuffled
+    # payload is just (id, embedding, norm, codes) — N rows.
     if num_partitions is not None:
         base = base.repartition(num_partitions)
     coded = base.select(
-        "_id", "_e", "_n", F.posexplode(codes).alias("table_id", "code")
+        "_id", "_e", "_n", F.posexplode("_c").alias("table_id", "code")
     )
     a, b = coded.alias("a"), coded.alias("b")
     # Cosine is computed IN the join projection and the embeddings dropped

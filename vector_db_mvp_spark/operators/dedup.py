@@ -530,20 +530,16 @@ def embedding_neardup_pairs_lsh(
     tau: float = 0.4,
     id_col: str = "vec_id",
     embedding_col: str = "embedding",
-    native: bool = False,
 ) -> DataFrame:
     """Scale path: candidates = pairs sharing an LSH bucket in >= 1 table
     (shuffle keyed by (table, code) — sub-quadratic), then exact cosine
     verify. Recall < 1 by construction; measured against the exact variant in
     tests."""
-    from ..functions.lsh import bucket_codes_native, bucket_codes_pandas, planes_dim
+    from ..functions.lsh import bucket_codes, planes_dim
     from ..functions.vector import l2_norm, sql_dot_cols
 
     dim = planes_dim(planes)
-    codes = (
-        bucket_codes_native(embedding_col, planes) if native
-        else bucket_codes_pandas(planes, embedding_col)
-    )
+    codes = bucket_codes(embedding_col, planes)
     # posexplode the codes expression directly — materializing via withColumn
     # first makes Catalyst re-inline it into both the Generate input and the
     # outer project, evaluating the hash twice per row (see lsh_topk_batch).

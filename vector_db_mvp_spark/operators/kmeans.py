@@ -42,7 +42,7 @@ def _dist_sq_sql(vec_col: str, centroid: list[float]) -> str:
     round, and element-wise Column algebra paid ~k*d py4j round trips per
     round (measured ~1 s of pure plan-construction latency per iteration
     at k=8, d=64) — one F.expr parse is ~100x cheaper (the
-    functions/lsh.py bucket_codes_native precedent)."""
+    functions/lsh.py spark_sql_plane_dot precedent)."""
     arr = "array(" + ", ".join(f"{float(x)!r}D" for x in centroid) + ")"
     return (
         f"round(aggregate(zip_with(cast({vec_col} as array<double>), {arr},"

@@ -3,8 +3,8 @@ and the composed search dispatch with brute-force fallback
 (``app/services/search_service.py:118-133``).
 
 Plan shapes:
-- **Single query** (``lsh_topk``): compute per-row codes, compute the query's
-  codes in the same plan (1-row broadcast), keep rows sharing ≥1 table bucket
+- **Single query** (``lsh_topk``): compute per-row codes, fold the query's
+  codes on the driver into long literals, keep rows sharing ≥1 table bucket
   (the reference's union-distinct of per-table candidate sets — expressed as
   one ``exists`` filter, so no union or distinct is ever materialized), exact
   cosine re-rank, TakeOrderedAndProject top-k.
@@ -24,14 +24,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.lsh import (
-    bucket_codes_native,
-    bucket_codes_pandas,
-    spark_sql_array_lit,
-)
+from ..functions.lsh import bucket_codes, bucket_codes_python
 from ..functions.vector import cosine_similarity
 from .topk import topk_cosine
 
@@ -44,38 +40,33 @@ def with_bucket_codes(
     *,
     embedding_col: str = "embedding",
     codes_col: str = "lsh_codes",
-    native: bool = False,
 ) -> DataFrame:
-    """Attach array<long> per-table bucket codes. ``native=True`` uses the
-    sequential-fold Catalyst expression (oracle-exact); default uses the
-    vectorized Arrow path (index-build throughput)."""
-    codes = (
-        bucket_codes_native(embedding_col, planes)  # one F.expr parse
-        if native
-        else bucket_codes_pandas(planes, embedding_col)
-    )
-    return df.withColumn(codes_col, codes)
+    """Attach array<long> per-table bucket codes: the one exact kernel
+    (functions.lsh.bucket_codes), bit-identical to the driver twin and the
+    DuckDB oracle."""
+    return df.withColumn(codes_col, bucket_codes(embedding_col, planes))
 
 
 def lsh_candidates(
     df: DataFrame,
-    query_codes: Column,
+    query_codes: Sequence[int],
     *,
     codes_col: str = "lsh_codes",
 ) -> DataFrame:
     """Rows sharing at least one table bucket with the query — the
-    union-distinct of per-table candidate sets (lsh.py:79-83) as one filter."""
+    union-distinct of per-table candidate sets (lsh.py:79-83) as one filter.
+    ``query_codes`` are the driver-folded codes (bucket_codes_python),
+    embedded as long literals in one parsed expression: no py4j round trip
+    per literal, and no hashing on the query side of the plan."""
+    qc = "array(" + ", ".join(f"{int(c)}L" for c in query_codes) + ")"
     return df.filter(
-        F.exists(
-            F.zip_with(F.col(codes_col), query_codes, lambda c, q: c == q),
-            lambda x: x,
-        )
+        F.expr(f"exists(zip_with({codes_col}, {qc}, (c, x) -> c = x), b -> b)")
     )
 
 
 def lsh_topk(
     df: DataFrame,
-    query_vector: Sequence[float] | Column,
+    query_vector: Sequence[float],
     k: int,
     planes: list[list[list[float]]],
     *,
@@ -83,34 +74,18 @@ def lsh_topk(
     id_col: str = "vec_id",
     score_col: str = "score",
     score_decimals: int | None = None,
-    native: bool = False,
 ) -> DataFrame:
     """Approximate top-k: bucket-prune then exact re-rank (lsh.py:73-95).
-
-    ``query_vector`` may be a literal vector, a column NAME (str), or a
-    Column. Name/literal forms compile via single F.expr parses — the fast
-    plan-construction path; an arbitrary Column falls back to tree building.
-    """
-    if isinstance(query_vector, str):
-        q: Column | str = F.col(query_vector)
-        qv_for_codes: object = query_vector
-    elif isinstance(query_vector, Column):
-        q = query_vector
-        qv_for_codes = query_vector
-    else:
-        vec = [float(x) for x in query_vector]
-        q = F.expr(spark_sql_array_lit(vec))
-        qv_for_codes = vec
+    Row codes come from the column kernel, the literal query's codes from
+    its driver twin."""
+    vec = [float(x) for x in query_vector]
     pruned = with_bucket_codes(
         df.filter(F.col(embedding_col).isNotNull()), planes,
-        embedding_col=embedding_col, native=native,
+        embedding_col=embedding_col,
     )
-    # Query codes are always the native expression: it's one vector, and the
-    # sequential fold keeps it bitwise-aligned with the oracle.
-    qc = bucket_codes_native(qv_for_codes, planes)
-    cands = lsh_candidates(pruned, qc).drop("lsh_codes")
+    cands = lsh_candidates(pruned, bucket_codes_python(vec, planes)).drop("lsh_codes")
     return topk_cosine(
-        cands, q, k,
+        cands, vec, k,
         embedding_col=embedding_col, id_col=id_col,
         score_col=score_col, score_decimals=score_decimals,
     )
@@ -125,14 +100,12 @@ def search_with_fallback(
     embedding_col: str = "embedding",
     id_col: str = "vec_id",
     fallback_max_rows: int = FALLBACK_MAX_ROWS,
-    native: bool = False,
 ) -> tuple[DataFrame, str]:
     """Reference dispatch (search_service.py:118-133): LSH first; if it finds
     nothing and the corpus is small, fall back to brute force. Returns
     (result, index_used)."""
     approx = lsh_topk(
-        df, query_vector, k, planes,
-        embedding_col=embedding_col, id_col=id_col, native=native,
+        df, query_vector, k, planes, embedding_col=embedding_col, id_col=id_col,
     )
     if k <= 0:
         return approx.limit(0), "lsh"
@@ -159,7 +132,6 @@ def lsh_topk_batch(
     id_col: str = "vec_id",
     score_col: str = "score",
     score_decimals: int | None = None,
-    native: bool = False,
 ) -> DataFrame:
     """Batched LSH top-k — many queries against one corpus in one shuffle.
 
@@ -170,12 +142,6 @@ def lsh_topk_batch(
     """
     from pyspark.sql import Window
 
-    def _codes(col: str) -> Column:
-        return (
-            bucket_codes_native(col, planes) if native
-            else bucket_codes_pandas(planes, col)
-        )
-
     # posexplode the codes EXPRESSION directly: materializing it first via
     # withColumn makes Catalyst re-inline the (UDF) expression into both the
     # Generate input and the outer project — two ArrowEvalPython passes over
@@ -183,11 +149,11 @@ def lsh_topk_batch(
     # generator form evaluates it once.
     c = corpus_df.filter(F.col(embedding_col).isNotNull()).select(
         id_col, embedding_col,
-        F.posexplode(_codes(embedding_col)).alias("table_id", "code"),
+        F.posexplode(bucket_codes(embedding_col, planes)).alias("table_id", "code"),
     )
     q = queries_df.filter(F.col(query_embedding_col).isNotNull()).select(
         query_id_col, query_embedding_col,
-        F.posexplode(_codes(query_embedding_col)).alias("table_id", "code"),
+        F.posexplode(bucket_codes(query_embedding_col, planes)).alias("table_id", "code"),
     )
     cand = (
         c.join(q, ["table_id", "code"])

@@ -20,7 +20,7 @@ precision, same two-phase shape as LSH prune and JL-sketch prefilter
 codes + table lookups, the classic compute-vs-memory-bandwidth swap.
 
 Encoding is one Arrow-batched pandas pass (a BLAS matmul argmin per
-subspace per batch — same pattern as the LSH matmul hasher,
+subspace per batch — the Arrow-batched pattern of the LSH kernel,
 functions/lsh.py); like all our pandas UDFs it is off the per-query path:
 encode once at ingest, serve forever.
 """

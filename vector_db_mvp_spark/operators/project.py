@@ -16,9 +16,9 @@ Implementation notes:
   single ``F.expr`` — building the expression tree via the Column API costs
   a py4j round-trip per literal (k*d of them, seconds of driver time).
 - Pure map work in whole-stage codegen: no shuffle, no Python, parallelism
-  = input splits. The Arrow-matmul pandas path (``functions/lsh.
-  bucket_codes_pandas``) is the alternative at very large k*d; for k*d up
-  to a few thousand the native fold wins by staying JVM-side.
+  = input splits. An Arrow-batched pandas pass (the ``functions/lsh.
+  bucket_codes`` pattern) is the alternative at very large k*d; for k*d up
+  to a few thousand the codegen fold wins by staying JVM-side.
 """
 
 from __future__ import annotations

@@ -41,7 +41,7 @@ def _bucket_expr(col: Column | str, bounds: list[float]) -> Column:
 
     Pass the column NAME when possible: the ``buckets - 1`` chained
     comparisons then compile through ONE F.expr parse instead of ~2 py4j
-    round trips per boundary (the functions/lsh.py bucket_codes_native
+    round trips per boundary (the functions/lsh.py spark_sql_plane_dot
     precedent — this helper is rebuilt with fresh boundary literals on
     every invocation of every caller, so construction latency is a real
     per-query cost). A Column input keeps the element-wise form for

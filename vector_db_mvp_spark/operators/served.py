@@ -8,9 +8,10 @@ the corpus is O(N·T·P) per query.  ``ChunkIndexStore``
 this module is its table-level twin for a static corpus table such as the
 benchmark's ``embeddings`` parquet:
 
-- **build** (once): attach per-table sign-bit codes via the Arrow-batched
-  matmul path (bit-identical to the native fold — asserted in
-  tests/test_lsh.py) and persist the serving layout as parquet.  At cluster
+- **build** (once): attach per-table sign-bit codes with the one exact
+  kernel (functions.lsh.bucket_codes — bit-identical to the driver twin
+  that hashes queries, asserted in tests/test_lsh.py) and persist the
+  serving layout as parquet.  At cluster
   scale this is the artifact a pipeline publishes; rebuilds happen on data
   change, never per query.
 - **serve** (per query): read only the serving columns, prune on the
@@ -34,7 +35,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.lsh import bucket_codes_native
+from ..functions.lsh import bucket_codes_python
 from ..session import local_frame
 from .lsh import lsh_candidates, with_bucket_codes
 from .topk import topk_cosine
@@ -86,8 +87,8 @@ def build_served_index(
     corpus = spark.read.parquet(corpus_path).filter(
         F.col(embedding_col).isNotNull()
     )
-    # Arrow matmul path: one BLAS call per batch at build time; codes are
-    # bit-identical to the oracle's sequential fold (tests/test_lsh.py).
+    # The exact Arrow kernel; codes are bit-identical to the query-side
+    # driver fold and the oracle's (tests/test_lsh.py).
     indexed = with_bucket_codes(corpus, planes, embedding_col=embedding_col)
     indexed.write.mode("overwrite").parquet(path)
     return path
@@ -104,7 +105,7 @@ def append_to_served_index(
     subdir: str | None = None,
 ) -> str:
     """O(batch) ingestion into an existing LSH serving artifact: hash ONLY
-    the new vectors (same Arrow matmul path as the build — codes are
+    the new vectors (same exact kernel as the build — codes are
     corpus-independent, so appended rows are bit-identical to a rebuild)
     and append their parquet files. The LSH mirror of
     operators/ivf.py append_to_ivf_layout; between corpus versions every
@@ -303,8 +304,7 @@ def lsh_topk_served(
         id_col=id_col,
     )
     qv = [float(x) for x in query_vector]
-    qc = bucket_codes_native(qv, planes)
-    cands = lsh_candidates(idx, qc).drop("lsh_codes")
+    cands = lsh_candidates(idx, bucket_codes_python(qv, planes)).drop("lsh_codes")
     return topk_cosine(
         cands, qv, k,
         embedding_col=embedding_col, id_col=id_col,

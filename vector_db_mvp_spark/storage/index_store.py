@@ -11,7 +11,8 @@ The build does the two things the reference does at index-build time, once:
 - **normalize-once** (``app/indexing/brute_force.py:29-30``): store unit
   vectors so query-time cosine is a plain dot product;
 - **bucket-once** (``app/indexing/lsh.py:39-41``): per-table sign-bit codes
-  via the Arrow-batched matmul path (one BLAS call per batch).
+  from the one exact kernel (``functions.lsh.bucket_codes``), bit-identical
+  to the driver fold that hashes each query.
 
 ``refresh()`` compares the stored ``built_version`` against the library's
 current ``version`` and is a no-op while they match; any write path bumps the
@@ -49,7 +50,7 @@ from pyspark.sql import functions as F
 from ..functions import lsh as lsh_fn
 from ..functions.lsh import generate_planes, spark_sql_plane_dot
 from ..functions.vector import unit_normalize
-from ..operators.lsh import with_bucket_codes
+from ..operators.lsh import lsh_candidates, with_bucket_codes
 from .store import EntityStore
 
 
@@ -220,13 +221,10 @@ class ChunkIndexStore:
         """Rows sharing a bucket with the query in at least one table. The
         query's codes are folded on the driver with the build's planes
         (sign(dot) is norm-invariant, so hashing the unit query gives the
-        raw vector's buckets) and embedded as long literals in one parsed
-        filter expression."""
+        raw vector's buckets) and embedded as long literals in the one
+        candidate filter (operators.lsh.lsh_candidates)."""
         codes = lsh_fn.bucket_codes_python(unit_q, self.planes_for(len(unit_q)))
-        qc = "array(" + ", ".join(f"{c}L" for c in codes) + ")"
-        return rows.filter(
-            F.expr(f"exists(zip_with(lsh_codes, {qc}, (c, x) -> c = x), b -> b)")
-        )
+        return lsh_candidates(rows, codes)
 
     @staticmethod
     def topk(rows: DataFrame, unit_q: list[float], k: int) -> DataFrame:

@@ -7,7 +7,7 @@ module keeps the artifact continuously queryable by running the two
 O(batch) maintenance primitives inside ``foreachBatch``:
 
 - ``op = 'add'`` rows → :func:`operators.served.append_to_served_index`
-  (hash only the batch with the same Arrow matmul path as the build —
+  (hash only the batch with the same exact kernel as the build —
   appended rows are bit-identical to a rebuild);
 - ``op = 'delete'`` rows → :func:`operators.served.tombstone_delete`
   (marker append; serve paths anti-join the marker set).

@@ -80,6 +80,16 @@ _CHANGED_THIS_ROUND = [
     "mmr_topk",
     "sequence_packing",
     "sequence_packing_bpe",
+    # LSH bucket codes come from one exact Arrow kernel
+    # (functions.lsh.bucket_codes) and query codes from its driver twin,
+    # filtered by one parsed candidate predicate. The set is every
+    # registered query whose builder calls bucket_codes or
+    # bucket_codes_python at sf0.001 (all builders run with a spy on both);
+    # the dbscan and embedding-dedup queries above are in it too.
+    "ann_lsh_recall",
+    "lsh_batch_topk",
+    "lsh_topk",
+    "lsh_topk_served",
 ]
 
 

@@ -188,7 +188,7 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     planes = generate_planes(64, 4, 8, seed=42)
     return embedding_neardup_pairs_lsh(
-        load_table(spark, sf_dir, "embeddings"), planes, tau=0.4, native=True
+        load_table(spark, sf_dir, "embeddings"), planes, tau=0.4
     ).orderBy("id1", "id2")
 
 

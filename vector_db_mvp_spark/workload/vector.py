@@ -401,15 +401,14 @@ LIMIT {k}
 
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3: LSH bucket-prune (union of per-table candidate sets) then exact
-    cosine re-rank, top-10. Uses the oracle-exact native hashing path for
-    row codes; the query vector is resolved driver-side (a pushed-down point
-    lookup) so its codes constant-fold to int literals."""
+    cosine re-rank, top-10. Row codes come from the exact Arrow kernel
+    (functions.lsh.bucket_codes); the query vector is resolved driver-side
+    (a pushed-down point lookup) so its codes fold to long literals."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).take(1)[0]["embedding"]]
-    return lsh_topk(
-        emb, qv, 10, _PLANES,
-        score_decimals=6, native=True,
-    ).select("vec_id", "label", "score")
+    return lsh_topk(emb, qv, 10, _PLANES, score_decimals=6).select(
+        "vec_id", "label", "score"
+    )
 
 
 def q_lsh_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -552,9 +551,8 @@ def q_lsh_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.lsh import lsh_topk_batch
 
-    # Arrow matmul hashing on both sides: one BLAS call per batch instead of
-    # T x P fold-dots per row, bit-identical codes (tests/test_lsh.py), and
-    # immune to the HOF-lambda CSE loss the native fold hits under posexplode.
+    # Exact Arrow kernel on both sides (functions.lsh.bucket_codes): one
+    # vectorized fold per batch, codes bit-identical to the oracle's.
     return lsh_topk_batch(
         queries_df, emb, 5, _PLANES, score_decimals=6
     ).orderBy("query_id", "rank")
@@ -1214,9 +1212,7 @@ def q_dbscan_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").isNotNull()
     )
     planes = generate_planes(64, _DBSCAN_TABLES, _DBSCAN_BITS, seed=42)
-    pairs = embedding_neardup_pairs_lsh(emb, planes, tau=0.3, native=True).select(
-        "id1", "id2"
-    )
+    pairs = embedding_neardup_pairs_lsh(emb, planes, tau=0.3).select("id1", "id2")
     # Pair graph is corpus-bounded but tiny relative to the session's
     # corpus-sized shuffle width; run the edge-linear stages narrow
     # (see dedup_clusters: ~40% of CC wall time was empty-task overhead).
