@@ -544,6 +544,7 @@ def main() -> None:
     import shutil
     import tempfile
 
+    from vector_db_mvp_spark.engine import SearchEngine  # noqa: E402
     from vector_db_mvp_spark.storage.index_store import ChunkIndexStore  # noqa: E402
     from vector_db_mvp_spark.storage.store import EntityStore  # noqa: E402
 
@@ -568,9 +569,11 @@ def main() -> None:
         list(r["embedding"]) for r in _emb.orderBy("vec_id").limit(50).collect()
     ]
 
+    _eng = SearchEngine(_eng_store, _eng_idx)
+
     def _engine_search_pass() -> None:
         for qv in _eng_queries:
-            _eng_idx.search(_eng_lib, qv, k=5).collect()
+            _eng.search(_eng_lib, query_embedding=qv, k=5).hits.collect()
 
     _engine_search_pass()  # codegen/plan warm
     metaspace["after_warm"] = _metaspace_mb()

@@ -15,7 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from vector_db_mvp_spark.engine import SearchEngine
 from vector_db_mvp_spark.plans.pipeline import DurableQueryPipeline, QueryRequest
 from vector_db_mvp_spark.session import get_spark
-from vector_db_mvp_spark.storage.index_store import ChunkIndexStore
 from vector_db_mvp_spark.storage.store import EntityStore
 
 
@@ -40,7 +39,7 @@ def main() -> None:
         store.add_chunk(lib, doc, text, embed_if_missing=True, meta_type=kind, dim=8)
     print(f"seeded library {lib} (version {store.library_version(lib)})")
 
-    engine = SearchEngine(store, index_store=ChunkIndexStore(store, os.path.join(root, "idx")))
+    engine = SearchEngine(store)  # serves from its index under the store root
 
     res = engine.search(lib, query_text="install", k=3)
     print("\nbrute top-3 for 'install':")

@@ -52,9 +52,10 @@ def test_bucketed_join_has_no_exchange(spark, bucketed):
 
 def test_chunks_scan_prunes_library_partition(spark, tmp_path):
     """The chunks fact table stores one immutable directory per library: a
-    per-library search scans ONLY that library's directory — at 100 TB this
-    is the difference between reading one library and reading the world."""
-    from vector_db_mvp_spark.engine import SearchEngine
+    per-library index build scans ONLY that library's directory — at 100 TB
+    this is the difference between reading one library and reading the
+    world."""
+    from vector_db_mvp_spark.storage.index_store import ChunkIndexStore
     from vector_db_mvp_spark.storage.store import EntityStore
 
     store = EntityStore(spark, str(tmp_path / "store"), default_dim=4)
@@ -65,13 +66,14 @@ def test_chunks_scan_prunes_library_partition(spark, tmp_path):
     store.add_chunk(lib1, d1, "x", [1.0, 0.0, 0.0, 0.0])
     store.add_chunk(lib2, d2, "y", [0.0, 1.0, 0.0, 0.0])
 
-    rows = SearchEngine(store).collect_rows(lib1)
+    rows = ChunkIndexStore(store, str(tmp_path / "index"))._build_rows(lib1)
     jvm = spark._jvm
     plan = rows._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert f"chunks.{lib1}" in plan  # scans lib1's directory...
     assert f"chunks.{lib2}" not in plan  # ...and never touches lib2's
+    assert "BroadcastHashJoin" in plan  # J1: the documents side is broadcast
     # full-table read still sees both libraries (union of current dirs)
     assert store.read("chunks").count() == 2
 

@@ -1,9 +1,10 @@
 """ChunkIndexStore: version-keyed staleness (rebuild only when the library
-version advances), parity of the cached dot-product path with the live
-engine, and LSH probes over precomputed codes."""
+version advances), parity of the served dot-product path with a numpy
+exact cosine top-k, and LSH probes over precomputed codes."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from vector_db_mvp_spark.engine import SearchEngine
@@ -25,70 +26,87 @@ def setup(spark, tmp_path):
     return store, lib, doc, idx
 
 
+def _hits(idx, lib, q, k, **kw):
+    res = SearchEngine(idx.store, idx).search(lib, query_embedding=q, k=k, **kw)
+    return res.hits.collect()
+
+
+def _exact_topk(store, lib, q, k):
+    """numpy float64 cosine over the library's embedded chunks (a zero
+    vector scores 0.0), ordered by score desc then chunk_id."""
+    rows = [r for r in store.read_chunks_library(lib).collect() if r["embedding"] is not None]
+    qv = np.asarray(q, dtype=np.float64)
+    scored = []
+    for r in rows:
+        v = np.asarray(r["embedding"], dtype=np.float64)
+        den = np.linalg.norm(v) * np.linalg.norm(qv)
+        scored.append((r["chunk_id"], float(v @ qv / den) if den else 0.0))
+    return sorted(scored, key=lambda t: (-t[1], t[0]))[:k]
+
+
+def _assert_exact(store, lib, q, hits):
+    want = _exact_topk(store, lib, q, len(hits))
+    assert [r["chunk_id"] for r in hits] == [c for c, _ in want]
+    for r, (_, score) in zip(hits, want):
+        assert r["score"] == pytest.approx(score, abs=1e-12)
+
+
 def test_build_once_serve_many(setup):
     store, lib, doc, idx = setup
     for _ in range(3):
-        hits = idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=2).collect()
+        hits = _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 2)
         assert [r["text"] for r in hits] == ["north", "northeast"]
     assert idx.builds == 1  # staleness check, not rebuild-per-query
 
 
 def test_write_invalidates(setup):
     store, lib, doc, idx = setup
-    idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=1)
+    _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 1)
     assert idx.builds == 1
     store.add_chunk(lib, doc, "north2", [0.9, 0.1, 0.0, 0.0], meta_type="heading")
-    hits = idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=2).collect()
+    hits = _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 2)
     assert idx.builds == 2  # version bump -> exactly one rebuild
     assert {r["text"] for r in hits} == {"north", "north2"}
     # unrelated metadata read does not rebuild
-    idx.search(lib, [0.0, 1.0, 0.0, 0.0], k=1)
+    _hits(idx, lib, [0.0, 1.0, 0.0, 0.0], 1)
     assert idx.builds == 2
 
 
 def test_cached_parity_with_engine(setup):
-    """dot(unit_emb, unit_q) from the persisted index == live cosine path."""
+    """dot(unit_emb, unit_q) from the persisted index == numpy float64
+    exact cosine: same order, scores within 1e-12."""
     store, lib, doc, idx = setup
-    eng = SearchEngine(store)
     q = [0.5, 0.8, 0.0, 0.0]
-    live = eng.search(lib, query_embedding=q, k=4).hits.collect()
-    cached = idx.search(lib, q, k=4).collect()
-    assert [r["chunk_id"] for r in cached] == [r["chunk_id"] for r in live]
-    for c, l in zip(cached, live):
-        assert c["score"] == pytest.approx(l["score"], abs=1e-12)
+    hits = _hits(idx, lib, q, 4)
+    assert len(hits) == 4
+    _assert_exact(store, lib, q, hits)
 
 
 def test_cached_semantics_edges(setup):
     store, lib, doc, idx = setup
     # null-embedding chunks were never indexed
-    texts = {r["text"] for r in idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=100).collect()}
+    texts = {r["text"] for r in _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 100)}
     assert "no-embedding" not in texts and "zero" in texts
     # k<=0 -> empty
-    assert idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=0).count() == 0
+    assert _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 0) == []
     # filters prune before scoring
-    got = idx.search(lib, [1.0, 1.0, 0.0, 0.0], k=10, filters={"meta_type": "heading"})
-    assert [r["text"] for r in got.collect()] == ["north"]
+    got = _hits(idx, lib, [1.0, 1.0, 0.0, 0.0], 10, filters={"meta_type": "heading"})
+    assert [r["text"] for r in got] == ["north"]
     # zero-vector query scores 0.0 everywhere (F1 convention)
-    assert all(
-        r["score"] == 0.0 for r in idx.search(lib, [0.0, 0.0, 0.0, 0.0], k=10).collect()
-    )
+    assert all(r["score"] == 0.0 for r in _hits(idx, lib, [0.0, 0.0, 0.0, 0.0], 10))
 
 
 def test_engine_serves_from_index(setup):
-    """SearchEngine(store, index_store=...) returns the same results as the
-    live path, builds the index once across queries, and rebuilds after a
-    write bumps the version."""
+    """SearchEngine(store, index_store=...) returns the exact cosine top-k,
+    builds the index once across queries, and rebuilds after a write bumps
+    the version."""
     store, lib, doc, idx = setup
-    live = SearchEngine(store)
     cached = SearchEngine(store, index_store=idx)
     q = [0.5, 0.8, 0.0, 0.0]
 
-    a = live.search(lib, query_embedding=q, k=4)
     b = cached.search(lib, query_embedding=q, k=4)
-    assert [r["chunk_id"] for r in b.hits.collect()] == [
-        r["chunk_id"] for r in a.hits.collect()
-    ]
-    assert (b.index_used, b.library_version) == (a.index_used, a.library_version)
+    _assert_exact(store, lib, q, b.hits.collect())
+    assert (b.index_used, b.library_version) == ("brute", store.library_version(lib))
     cached.search(lib, query_embedding=q, k=2, filters={"meta_type": "heading"})
     assert idx.builds == 1  # one build served every query
 
@@ -106,29 +124,27 @@ def test_engine_indexed_lsh_and_param_mismatch(setup):
     res = cached.search(lib, query_embedding=[1.0, 0.0, 0.0, 0.0], k=2, index="lsh")
     assert res.hits.count() >= 1  # fallback fills if buckets miss
     builds_before = idx.builds
-    # non-matching LSH config must fall back to the live path, not use codes
+    # another LSH config hashes the stored unit vectors in the plan; the
+    # index is not rebuilt for it
     res2 = cached.search(
         lib, query_embedding=[1.0, 0.0, 0.0, 0.0], k=2, index="lsh",
         lsh_tables=2, lsh_planes=4,
     )
     assert res2.hits.count() >= 1
-    assert idx.builds == builds_before  # live path didn't touch the index
+    assert idx.builds == builds_before
     # unknown index still errors through the indexed engine
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown index"):
+    with pytest.raises(ValueError, match="unknown index"):
         cached.search(lib, query_embedding=[1.0, 0.0, 0.0, 0.0], k=2, index="hnsw")
 
 
 def test_cached_lsh_probe(setup):
     store, lib, doc, idx = setup
-    hits = idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=2, index="lsh").collect()
-    # LSH candidates re-ranked exactly: whatever survives pruning is ordered
-    # by true cosine; the top hit must be the exact-match vector if present
-    if hits:
-        assert hits[0]["text"] in ("north", "northeast")
+    hits = _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 2, index="lsh")
+    # LSH candidates re-ranked exactly: the query shares every bucket with
+    # the identical vector, so it survives pruning and ranks first
+    assert hits and hits[0]["text"] == "north"
     with pytest.raises(ValueError, match="unknown index"):
-        idx.search(lib, [1.0, 0.0, 0.0, 0.0], k=2, index="hnsw")
+        _hits(idx, lib, [1.0, 0.0, 0.0, 0.0], 2, index="hnsw")
 
 
 def test_rebuild_defers_eviction_one_generation(setup, spark):

@@ -1,7 +1,7 @@
 """LSH index behavior (reference lsh.py semantics) beyond the oracle gate:
 determinism, the column kernel against its driver twin (every row, plus the
-edge rows), recall vs brute force, fallback dispatch, and batch-mode parity
-with single-query mode."""
+edge rows), recall vs brute force, and batch-mode parity with single-query
+mode. The brute fallback is the search engine's (tests/test_search_engine.py)."""
 
 from __future__ import annotations
 
@@ -22,7 +22,6 @@ from vector_db_mvp_spark.operators.dedup import embedding_neardup_pairs_lsh
 from vector_db_mvp_spark.operators.lsh import (
     lsh_topk,
     lsh_topk_batch,
-    search_with_fallback,
     with_bucket_codes,
 )
 from vector_db_mvp_spark.operators.topk import topk_cosine
@@ -134,27 +133,6 @@ def test_lsh_subset_of_corpus_and_recall(spark, emb, query_vec):
     # the query vector itself always collides with itself -> rank 1, score 1.0
     assert approx[0]["vec_id"] == 0
     assert approx[0]["score"] == pytest.approx(1.0)
-
-
-def test_fallback_to_brute_on_empty_candidates(spark, emb, query_vec):
-    """Planes from a hostile seed can still bucket-match nothing only rarely;
-    force the empty-candidate path with an impossible corpus instead: all
-    rows filtered out by a pre-filter -> LSH empty -> N<=10k -> brute rerun
-    also empty... so use a real case: tiny corpus + many planes."""
-    tiny = emb.filter(F.col("vec_id").between(100, 120))
-    planes = generate_planes(DIM, 1, 24, seed=1)  # 2^24 buckets, 21 rows
-    result, used = search_with_fallback(tiny, query_vec, 5, planes)
-    rows = result.collect()
-    if used == "brute":
-        assert len(rows) == 5  # brute always fills k from 21 rows
-    else:
-        assert 1 <= len(rows) <= 5
-
-
-def test_fallback_k_nonpositive(spark, emb, query_vec):
-    planes = generate_planes(DIM, 4, 8, seed=42)
-    result, used = search_with_fallback(emb, query_vec, 0, planes)
-    assert result.count() == 0
 
 
 def test_batch_matches_single(spark, emb):

@@ -130,6 +130,29 @@ def test_lsh_path_and_fallback_reporting(engine):
     assert res2.hits.count() >= 1
 
 
+def test_lsh_fallback_reports_brute_and_fills_k(engine):
+    """One table of 24 planes: the query -north shares no bucket with any
+    row (north's bits are all flipped; east, northeast and zero miss with
+    the fixed seed), so LSH finds nothing and the fallback (N <= 10k)
+    re-runs brute force, reports it, and fills k."""
+    q = [-1.0, 0.0, 0.0, 0.0]
+    res = engine.search(
+        engine._lib, query_embedding=q, k=3, index="lsh", lsh_tables=1, lsh_planes=24,
+    )
+    assert (res.index, res.index_used) == ("lsh", "brute")
+    brute = engine.search(engine._lib, query_embedding=q, k=3)
+    assert res.hits.collect() == brute.hits.collect()
+    assert len(_texts(res)) == 3
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_lsh_k_nonpositive_no_hits(engine, k):
+    res = engine.search(
+        engine._lib, query_embedding=[1.0, 0.0, 0.0, 0.0], k=k, index="lsh",
+    )
+    assert res.hits.collect() == [] and res.index_used is None
+
+
 def test_version_bumps_reflected_in_search(engine):
     before = engine.search(engine._lib, query_embedding=[1.0, 0.0, 0.0, 0.0], k=1)
     engine.store.update_document(engine._lib, engine._doc, title="doc2")

@@ -11,6 +11,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
+from vector_db_mvp_spark.engine import SearchEngine
 from vector_db_mvp_spark.sources.testdata import load_table
 from vector_db_mvp_spark.storage.store import EntityStore
 from vector_db_mvp_spark.streaming.session_stream import (
@@ -224,7 +225,7 @@ def test_session_stream_lifecycle(spark, tmp_path):
     cmd_dir = str(tmp_path / "cmds")
     out_dir = str(tmp_path / "out")
     store = EntityStore(spark, str(tmp_path / "store"), default_dim=4)
-    proc = SessionStreamProcessor(spark, store, out_dir)
+    proc = SessionStreamProcessor(SearchEngine(store), out_dir)
     _write_command(cmd_dir, 0, session_id="s1", seq=0, action="add_library",
                    payload=json.dumps({"name": "stream-lib"}))
     _write_command(cmd_dir, 1, session_id="s1", seq=1, action="add_document",
@@ -254,7 +255,7 @@ def test_session_stream_lww_and_error_containment(spark, tmp_path):
     cmd_dir = str(tmp_path / "cmds2")
     out_dir = str(tmp_path / "out2")
     store = EntityStore(spark, str(tmp_path / "store2"), default_dim=4)
-    proc = SessionStreamProcessor(spark, store, out_dir)
+    proc = SessionStreamProcessor(SearchEngine(store), out_dir)
     # same session, one batch: seq 0 (would create library) dropped, seq 1 runs
     _write_command(cmd_dir, 0, session_id="s2", seq=0, action="add_library",
                    payload=json.dumps({"name": "will-be-dropped"}))

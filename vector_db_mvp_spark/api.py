@@ -48,9 +48,7 @@ class InteractiveApi:
         self.root = root or tempfile.mkdtemp(prefix="interactive-api-")
         self.cmd_dir = os.path.join(self.root, "commands")
         os.makedirs(self.cmd_dir, exist_ok=True)
-        self.processor = SessionStreamProcessor(
-            engine.store.spark, engine.store, os.path.join(self.root, "out")
-        )
+        self.processor = SessionStreamProcessor(engine, os.path.join(self.root, "out"))
         self._seqs: dict[str, int] = {}
         self._clock = 0
 

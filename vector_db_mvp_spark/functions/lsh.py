@@ -10,8 +10,9 @@ exact, which is what guarantees bucket parity.
 Bucket code (reference ``lsh.py:58-64``): P-bit integer, bit i set iff
 ``dot(v, plane_i) >= 0``. The reference hashes the *unit* vector, but
 ``sign(dot(unit(v), p)) == sign(dot(v, p))`` for any ``v`` (positive norm;
-the zero vector is left unchanged by ``_unit``), so we hash raw vectors and
-skip a normalization pass.
+the zero vector is left unchanged by ``_unit``), so the batch operators hash
+raw vectors and skip a normalization pass. The search engine hashes the unit
+vectors its index stores, and the unit query, as the reference does.
 
 One exact kernel, three renderings of one fold. Every dot is the sequential
 double fold ``acc = 0.0; acc = acc + v[j] * p[j]`` for j = 0..D-1:

@@ -1,6 +1,4 @@
-"""LSH approximate top-k (reference T3/J2/U1, ``app/indexing/lsh.py:73-95``)
-and the composed search dispatch with brute-force fallback
-(``app/services/search_service.py:118-133``).
+"""LSH approximate top-k (reference T3/J2/U1, ``app/indexing/lsh.py:73-95``).
 
 Plan shapes:
 - **Single query** (``lsh_topk``): compute per-row codes, fold the query's
@@ -15,9 +13,8 @@ Plan shapes:
   (lsh.py:29), so the re-rank is tiny.
 
 Fallback (search_service.py:127-131): if LSH yields zero candidates and the
-row count is ≤ ``fallback_max_rows``, silently re-run brute force and report
-``index_used='brute'``. The candidate-count check is one cheap action over
-the already-pruned frame.
+row count is ≤ ``FALLBACK_MAX_ROWS``, ``SearchEngine.search`` silently re-runs
+brute force and reports ``index_used='brute'``.
 """
 
 from __future__ import annotations
@@ -89,35 +86,6 @@ def lsh_topk(
         embedding_col=embedding_col, id_col=id_col,
         score_col=score_col, score_decimals=score_decimals,
     )
-
-
-def search_with_fallback(
-    df: DataFrame,
-    query_vector: Sequence[float],
-    k: int,
-    planes: list[list[list[float]]],
-    *,
-    embedding_col: str = "embedding",
-    id_col: str = "vec_id",
-    fallback_max_rows: int = FALLBACK_MAX_ROWS,
-) -> tuple[DataFrame, str]:
-    """Reference dispatch (search_service.py:118-133): LSH first; if it finds
-    nothing and the corpus is small, fall back to brute force. Returns
-    (result, index_used)."""
-    approx = lsh_topk(
-        df, query_vector, k, planes, embedding_col=embedding_col, id_col=id_col,
-    )
-    if k <= 0:
-        return approx.limit(0), "lsh"
-    if len(approx.take(1)) > 0:
-        return approx, "lsh"
-    n = df.filter(F.col(embedding_col).isNotNull()).count()
-    if n <= fallback_max_rows:
-        return (
-            topk_cosine(df, query_vector, k, embedding_col=embedding_col, id_col=id_col),
-            "brute",
-        )
-    return approx, "lsh"
 
 
 def lsh_topk_batch(

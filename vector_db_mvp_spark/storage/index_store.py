@@ -28,7 +28,7 @@ action on the old frame). The stale generation's blocks are freed on the
 NEXT rebuild, so serving memory stays bounded at <= 2 index copies per
 library while callers holding a frame across a single rebuild keep a
 computable snapshot. A frame held across TWO rebuilds becomes
-unrecomputable — re-request it from ``index_df``/``search``, or re-read
+unrecomputable — re-request it from ``index_df``, or re-read
 the old immutable directory with ``spark.read.parquet`` (collected
 results are never affected).
 
@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import os
 import uuid
-from typing import Any, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,7 +73,7 @@ class ChunkIndexStore:
         self.lsh_planes = lsh_planes
         self.seed = seed
         self.builds = 0  # observability: staleness tests count rebuilds
-        self._planes: dict[int, list] = {}  # dim -> planes
+        self._planes: dict[tuple[int, int, int], list] = {}  # (dim, tables, planes)
         os.makedirs(root, exist_ok=True)
 
     # ---- pointer files: "<dir>\t<built_version>\t<dim>" -----------------
@@ -108,21 +108,30 @@ class ChunkIndexStore:
     def _current_dir(self, library_id: str) -> str:
         return self._read_pointer(library_id)[0]
 
-    def planes_for(self, dim: int) -> list:
-        if dim not in self._planes:
-            self._planes[dim] = generate_planes(
-                dim, self.lsh_tables, self.lsh_planes, seed=self.seed
+    def planes_for(
+        self, dim: int, tables: int | None = None, planes: int | None = None
+    ) -> list:
+        """The hyperplanes of one LSH config (default: the index's own),
+        generated once per (dim, tables, planes). A code is one bigint per
+        table, so a table holds 1 to 63 planes."""
+        tables = self.lsh_tables if tables is None else tables
+        planes = self.lsh_planes if planes is None else planes
+        if tables < 1 or not 1 <= planes <= 63:
+            raise ValueError(
+                f"lsh_tables must be >= 1 and lsh_planes in 1..63, got {tables}, {planes}"
             )
-        return self._planes[dim]
+        key = (dim, tables, planes)
+        if key not in self._planes:
+            self._planes[key] = generate_planes(dim, tables, planes, seed=self.seed)
+        return self._planes[key]
 
     # ---- build ----------------------------------------------------------
 
-    def refresh(self, library_id: str) -> bool:
-        """Rebuild the library's index iff its version advanced. Returns
-        True when a rebuild happened."""
-        current = self.store.library_version(library_id)  # raises NotFound
-        if self.built_version(library_id) == current:
-            return False
+    def _build_rows(self, library_id: str) -> DataFrame:
+        """The rows a build indexes (S3/J1): one library's embedded chunks
+        joined to their documents' category, with unit vectors.
+        ``read_chunks_library`` opens only that library's directories — the
+        layout IS the partition, so no partition filter is needed."""
         chunks = self.store.read_chunks_library(library_id).filter(
             F.col("embedding").isNotNull()
         )
@@ -131,9 +140,17 @@ class ChunkIndexStore:
             .filter(F.col("library_id") == library_id)
             .select("doc_id", "category")
         )
-        rows = chunks.join(F.broadcast(docs), "doc_id", "left").withColumn(
+        return chunks.join(F.broadcast(docs), "doc_id", "left").withColumn(
             "unit_embedding", unit_normalize(F.col("embedding"))
         )
+
+    def refresh(self, library_id: str) -> bool:
+        """Rebuild the library's index iff its version advanced. Returns
+        True when a rebuild happened."""
+        current = self.store.library_version(library_id)  # raises NotFound
+        if self.built_version(library_id) == current:
+            return False
+        rows = self._build_rows(library_id)
         first = rows.select("embedding").take(1)
         dim = len(first[0]["embedding"]) if first else 0
         if dim:
@@ -171,7 +188,7 @@ class ChunkIndexStore:
         Eviction is DEFERRED by one generation (ADVICE r13): when the
         pointer moves, the replaced checkpoint parks in a one-slot stale
         cache — still persisted, so a lazy frame a caller obtained from
-        an earlier ``index_df``/``search`` stays computable across one
+        an earlier ``index_df`` stays computable across one
         rebuild, and the non-blocking unpersist cannot race an in-flight
         action on the frame being replaced. The slot's PREVIOUS occupant
         (two generations old) is unpersisted here; a frame held across
@@ -206,8 +223,7 @@ class ChunkIndexStore:
 
     # ---- query paths over the precomputed columns -----------------------
     # ``unit_query``, ``lsh_candidates`` and ``topk`` are the one indexed
-    # top-k: ``search`` below and the served ``SearchEngine.search`` both
-    # compose them.
+    # top-k, composed by ``SearchEngine.search``.
 
     @staticmethod
     def unit_query(qvec: Sequence[float]) -> list[float]:
@@ -217,14 +233,20 @@ class ChunkIndexStore:
         norm = sum(x * x for x in q) ** 0.5
         return [x / norm for x in q] if norm != 0.0 else q
 
-    def lsh_candidates(self, rows: DataFrame, unit_q: list[float]) -> DataFrame:
+    def lsh_candidates(
+        self, rows: DataFrame, unit_q: list[float], tables: int, planes: int
+    ) -> DataFrame:
         """Rows sharing a bucket with the query in at least one table. The
-        query's codes are folded on the driver with the build's planes
-        (sign(dot) is norm-invariant, so hashing the unit query gives the
-        raw vector's buckets) and embedded as long literals in the one
-        candidate filter (operators.lsh.lsh_candidates)."""
-        codes = lsh_fn.bucket_codes_python(unit_q, self.planes_for(len(unit_q)))
-        return lsh_candidates(rows, codes)
+        query's codes are folded on the driver (sign(dot) is norm-invariant,
+        so hashing the unit query gives the raw vector's buckets) and
+        embedded as long literals in the one candidate filter
+        (operators.lsh.lsh_candidates). At the index's own config the stored
+        codes are filtered; any other config hashes the stored unit vectors
+        in the plan and never rebuilds the index."""
+        hyper = self.planes_for(len(unit_q), tables, planes)
+        if (tables, planes) != (self.lsh_tables, self.lsh_planes):
+            rows = with_bucket_codes(rows, hyper, embedding_col="unit_embedding")
+        return lsh_candidates(rows, lsh_fn.bucket_codes_python(unit_q, hyper))
 
     @staticmethod
     def topk(rows: DataFrame, unit_q: list[float], k: int) -> DataFrame:
@@ -237,28 +259,3 @@ class ChunkIndexStore:
             "score", F.expr(spark_sql_plane_dot("unit_embedding", unit_q))
         )
         return scored.orderBy(F.desc("score"), F.asc("chunk_id")).limit(k)
-
-    def search(
-        self,
-        library_id: str,
-        query_embedding: Sequence[float],
-        k: int = 5,
-        *,
-        index: str = "brute",
-        filters: dict[str, Any] | None = None,
-    ) -> DataFrame:
-        """Same result contract as SearchEngine.search's hits (§2.11), served
-        from the persisted index: cosine == dot(unit_emb, unit_q); LSH prunes
-        on precomputed codes before the same dot re-rank (no brute fallback
-        here — that is SearchEngine's dispatch)."""
-        from ..engine import SearchEngine  # circular-at-import-time only
-
-        idx = SearchEngine.apply_metadata_filters(self.index_df(library_id), filters)
-        if k <= 0:
-            return SearchEngine._no_hits(idx)
-        if index not in ("brute", "lsh"):
-            raise ValueError(f"unknown index: {index}")
-        unit_q = self.unit_query(query_embedding)
-        if index == "lsh":
-            idx = self.lsh_candidates(idx, unit_q)
-        return SearchEngine._pack(self.topk(idx, unit_q, k))

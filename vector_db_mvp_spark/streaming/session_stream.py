@@ -44,7 +44,6 @@ from pyspark.sql.types import (
 
 from ..engine import SearchEngine
 from ..session import local_frame
-from ..storage.store import EntityStore
 
 COMMAND_SCHEMA = StructType(
     [
@@ -69,10 +68,12 @@ TIMELINE_SCHEMA = StructType(
 class SessionStreamProcessor:
     """foreachBatch handler applying session commands to an EntityStore."""
 
-    def __init__(self, spark: SparkSession, store: EntityStore, out_dir: str) -> None:
-        self.spark = spark
-        self.store = store
-        self.engine = SearchEngine(store)
+    def __init__(self, engine: SearchEngine, out_dir: str) -> None:
+        """Commands write through ``engine.store`` and query through
+        ``engine``, so the session shares the caller's index cache."""
+        self.engine = engine
+        self.store = engine.store
+        self.spark = engine.store.spark
         self.out_dir = out_dir
         self.timeline_dir = os.path.join(out_dir, "timeline")
         self.results_dir = os.path.join(out_dir, "results")
